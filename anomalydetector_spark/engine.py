@@ -29,7 +29,6 @@ from anomalydetector_spark.kernel.sr import SrParams
 from anomalydetector_spark.operators import checks as C
 from anomalydetector_spark.operators import errors as E
 from anomalydetector_spark.plans import fused
-from anomalydetector_spark.stats import compute_window_stats  # noqa: F401 (public API)
 
 PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 
@@ -38,11 +37,10 @@ PAGES_COLUMNS = ["url", "warc_ts", "html", "text", "lang"]
 class ValidationConfig:
     window_duration: str = "1 day"
     partition_by: str | None = None  # column name for per-partition verdicts
-    langs: tuple[str, ...] = ("en", "de", "fr", "zh", "es")
+    langs: tuple[str, ...] = fused.DEFAULT_LANGS
     sr: SrParams = field(default_factory=SrParams)
     min_points: int = 12
     unique_key: str = "url"
-    batch_size: int = 0
     # opt-in: the one check pair that must read the ``html`` binary /
     # full ``text`` bytes (north-rule byte-identity invariant). Off by
     # default so the standard suite never scans html.
@@ -62,11 +60,11 @@ class ValidationConfig:
     # quantile scalars:
     #   * lang_js_divergence — Jensen-Shannon of the lang distribution,
     #   * len_hist_emd — binned earth-mover's distance of the text
-    #     LENGTH histogram (log2 bins, exact integer arithmetic via
-    #     operators/divergence.numeric_drift_from_bin_counts),
+    #     LENGTH histogram (log2 bins, exact integer arithmetic),
     #   * len_hist_psi — PSI of the same histogram (complementary lens:
     #     EMD sees mass TRAVEL distance, PSI sees log-ratio
-    #     reweighting; operators/divergence.psi_chi2_from_bin_counts).
+    #     reweighting); both come from one full_histogram_drift pass
+    #     (operators/divergence.py).
     shape_drift: bool = True
     # user-defined constraints (operators/asserts.py). Row asserts ride
     # the fused cube scan and the shared violation-extraction scan; all
@@ -173,7 +171,9 @@ def run_validation(
     config: ValidationConfig | None = None,
 ) -> ValidationResult:
     cfg = config or ValidationConfig()
-    C.validate_batch_size(cfg.batch_size, cfg.min_points)
+    # SR batching is cfg.sr.batch_size; reject what the reference and
+    # `cli detect` reject instead of letting the kernel clamp it
+    C.validate_batch_size(cfg.sr.batch_size)
 
     keyed = fused.keyed_input(pages, cfg.window_duration, cfg.partition_by)
     if domains is not None and "domain" not in pages.columns:
@@ -490,20 +490,30 @@ def run_validation(
     if cfg.shape_drift:
         from anomalydetector_spark.operators.divergence import (
             divergence_from_window_counts,
+            full_histogram_drift,
         )
 
-        lang_counts = (
-            cube.filter(F.col("window_start").isNotNull())
-            .groupBy(
-                "partition_key",
-                F.col("window_start").alias("w_start"),
-                F.coalesce("lang", F.lit("<null>")).alias("cat"),
+        def window_counts(key: Column, name: str) -> DataFrame:
+            """Re-aggregate the tiny cube into the drift operators'
+            counts frame ``(partition_key, w_start, <name>, n, w_end)``
+            — a rollup, not a scan."""
+            return (
+                cube.filter(F.col("window_start").isNotNull())
+                .groupBy(
+                    "partition_key",
+                    F.col("window_start").alias("w_start"),
+                    key.alias(name),
+                )
+                .agg(F.sum("_n").alias("n"))
+                .withColumn(
+                    "w_end",
+                    F.col("w_start")
+                    + F.expr(f"INTERVAL {cfg.window_duration}"),
+                )
             )
-            .agg(F.sum("_n").alias("n"))
-            .withColumn(
-                "w_end",
-                F.col("w_start") + F.expr(f"INTERVAL {cfg.window_duration}"),
-            )
+
+        lang_counts = window_counts(
+            F.coalesce("lang", F.lit("<null>")), "cat"
         )
         shape_series = divergence_from_window_counts(
             lang_counts, part_cols=["partition_key"]
@@ -519,39 +529,20 @@ def run_validation(
         # keyed by exact _len, so log2 binning is a reaggregation of
         # the tiny frame, not a scan). log2 bins: heavy-tailed lengths
         # get stable resolution at every magnitude, no (lo, hi) tuning.
-        len_counts = (
-            cube.filter(F.col("window_start").isNotNull())
-            .groupBy(
-                "partition_key",
-                F.col("window_start").alias("w_start"),
-                F.least(
-                    F.floor(
-                        F.log2(F.coalesce(F.col("_len"), F.lit(0)) + 1)
-                    ),
-                    F.lit(31),
-                )
-                .cast("int")
-                .alias("bin"),
-            )
-            .agg(F.sum("_n").alias("n"))
-            .withColumn(
-                "w_end",
-                F.col("w_start") + F.expr(f"INTERVAL {cfg.window_duration}"),
-            )
+        len_counts = window_counts(
+            F.least(
+                F.floor(F.log2(F.coalesce(F.col("_len"), F.lit(0)) + 1)),
+                F.lit(31),
+            ).cast("int"),
+            "bin",
         )
-        # EMD + PSI of the same length histogram in ONE fused alignment
-        # pass (full_histogram_drift — value-identical to the separate
-        # operators, test-pinned; fusing matters because each tiny
-        # series otherwise costs ~1s of pure stage overhead on the 1M
-        # flagship). PSI is the complementary lens to EMD: EMD sees
-        # mass TRAVEL distance, PSI sees log-ratio reweighting — a swap
-        # between adjacent bins moves PSI more than EMD, a long-haul
-        # shift the reverse. Same tiny len_counts frame either way:
-        # zero extra input scans.
-        from anomalydetector_spark.operators.divergence import (
-            full_histogram_drift,
-        )
-
+        # EMD + PSI of the same length histogram in ONE alignment pass
+        # (fusing matters because each tiny series otherwise costs ~1s
+        # of pure stage overhead on the 1M flagship). PSI is the
+        # complementary lens to EMD: EMD sees mass TRAVEL distance, PSI
+        # sees log-ratio reweighting — a swap between adjacent bins
+        # moves PSI more than EMD, a long-haul shift the reverse. Same
+        # tiny len_counts frame either way: zero extra input scans.
         len_series = full_histogram_drift(
             len_counts, part_cols=["partition_key"]
         ).selectExpr(

@@ -19,12 +19,109 @@ plain column arithmetic; per-window sums partial-aggregate. The emitted
 one-row-per-window series is exactly what ``drift.score_drift`` consumes
 (stat_name = e.g. ``lang_js_divergence``), so shape drift rides the same
 SR + threshold machinery as every scalar stat.
+
+**Alignment contract** — shared by every window-pair operator here
+(:func:`divergence_from_window_counts`, :func:`full_histogram_drift`
+and its projections :func:`numeric_drift_from_bin_counts` /
+:func:`psi_chi2_from_bin_counts`, :func:`ks_drift_from_value_counts`,
+:func:`topk_churn`, :func:`divergence_attribution`) and implemented
+once, in ``_window_pairs``:
+
+* input is a counts frame ``(*part_cols, w_start, w_end, <key>, n)``
+  with one row per (window, key); ``part_cols`` keeps independent
+  series per partition (the engine passes ``partition_key``);
+* windows tumble, so a window's successor starts at its end: pairing
+  ``prev.w_end == cur.w_start`` is a pure equi-join on ``(*part_cols,
+  w_start, <key>)``, FULL OUTER so a key present on one side only
+  still pairs with an implicit zero count;
+* only windows present on BOTH sides emit a row. The first window of
+  each partition has no predecessor and is omitted (a divergence
+  against nothing is undefined, not zero); so is a window whose
+  predecessor slot is empty (data gap), and the synthetic slot after
+  the last window;
+* an ``n = 0`` row counts as present: it still pairs the window and
+  widens the support counts (``n_categories``, ``n_bins_hit``,
+  ``n_bins_union``, ``n_support``, top-k ranks, attribution rows). A
+  window whose counts sum to 0 has no distribution; once paired, JS,
+  L∞/TVD/EMD and KS raise ``DIVIDE_BY_ZERO`` under ANSI.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+DEC = "decimal(38,0)"
+
+
+def _window_pairs(counts: DataFrame, part: list[str], key: str) -> DataFrame:
+    """The alignment contract (module docstring): rows ``(*part,
+    w_start, <key>, c, d, tc, td)`` for every window present on both
+    sides — ``c``/``d`` the current/previous window's count of the key
+    (NULL where that side lacks it), ``tc``/``td`` the two window
+    totals."""
+    per_w = Window.partitionBy(*part, "w_start")
+    wc = counts.withColumn("t", F.sum("n").over(per_w))
+    cur = wc.select(
+        *part, "w_start", key, F.col("n").alias("c"), F.col("t").alias("tc")
+    )
+    prev = wc.select(
+        *part,
+        F.col("w_end").alias("w_start"),
+        key,
+        F.col("n").alias("d"),
+        F.col("t").alias("td"),
+    )
+    return (
+        cur.join(prev, [*part, "w_start", key], "full_outer")
+        .withColumn("tc", F.max("tc").over(per_w))
+        .withColumn("td", F.max("td").over(per_w))
+        .filter(F.col("tc").isNotNull() & F.col("td").isNotNull())
+    )
+
+
+def _exact_window_pairs(
+    counts: DataFrame, part: list[str], key: str
+) -> DataFrame:
+    """:func:`_window_pairs` for the cross-multiplied integer distances:
+    ``c``/``d`` zero-filled and all four counts in decimal(38,0)."""
+    return _window_pairs(counts, part, key).select(
+        *part,
+        "w_start",
+        key,
+        *(F.coalesce(x, F.lit(0)).cast(DEC).alias(x) for x in ("c", "d")),
+        *(F.col(x).cast(DEC).alias(x) for x in ("tc", "td")),
+    )
+
+
+def _finite(value: Column) -> Column:
+    """NULL and NaN excluded — the drift family's input rule."""
+    return value.isNotNull() & ~F.isnan(value.cast("double"))
+
+
+def _counts_from_rows(
+    df: DataFrame,
+    ts_col: str,
+    window: str,
+    key: str,
+    key_expr: Column,
+    where: Column | None = None,
+) -> DataFrame:
+    """Raw rows → the counts frame ``(w_start, w_end, <key>, n)`` the
+    window-pair operators consume: one tumbling-window ``groupBy`` over
+    the rows passing ``where``."""
+    rows = df if where is None else df.filter(where)
+    return (
+        rows.groupBy(F.window(ts_col, window).alias("w"), key_expr.alias(key))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.col("w.start").alias("w_start"),
+            F.col("w.end").alias("w_end"),
+            key,
+            "n",
+        )
+    )
 
 
 def divergence_from_window_counts(
@@ -36,51 +133,26 @@ def divergence_from_window_counts(
     counts cube), so shape drift costs ZERO extra input scans.
 
     Output: (*part_cols, window_start, js_divergence, tvd,
-    n_categories). The first window of each partition has no predecessor
-    and is omitted (a divergence against nothing is undefined, not
-    zero); likewise a window whose predecessor slot is empty (data gap).
+    n_categories) under the module's alignment contract. ``p``/``q``
+    are double probabilities ``n / T``; a category absent on one side
+    has probability 0 there.
     """
     part = list(part_cols)
-    tot = Window.partitionBy(*part, "w_start")
-    probs = counts.withColumn("p", F.col("n") / F.sum("n").over(tot))
-
-    cur = probs.select(*part, "w_start", "cat", F.col("p").alias("p_cur"))
-    prev = probs.select(
-        # a window's successor starts at its end (tumbling windows), so
-        # aligning prev.w_end == cur.w_start is a pure equi-join
-        *part, F.col("w_end").alias("w_start"), "cat", F.col("p").alias("p_prev")
-    )
-    pairs = cur.join(prev, [*part, "w_start", "cat"], "full_outer").select(
-        *part,
-        "w_start",
-        "cat",
-        F.coalesce("p_cur", F.lit(0.0)).alias("p"),
-        F.coalesce("p_prev", F.lit(0.0)).alias("q"),
-        F.col("p_cur").isNotNull().alias("in_cur"),
-    )
-    # windows present only as predecessors (the stream's first window
-    # and any window after the last) surface as rows with p_cur all-null;
-    # those synthetic "next" windows are dropped — only real current
-    # windows with a real predecessor emit a score
-    has_prev = Window.partitionBy(*part, "w_start")
-    pairs = pairs.withColumn(
-        "w_has_cur", F.max(F.col("in_cur").cast("int")).over(has_prev)
-    ).withColumn(
-        "w_has_prev", F.max((F.col("q") > 0).cast("int")).over(has_prev)
-    ).filter((F.col("w_has_cur") == 1) & (F.col("w_has_prev") == 1))
-
-    m = (F.col("p") + F.col("q")) / 2.0
+    pairs = _window_pairs(counts, part, "cat")
+    p = F.coalesce(F.col("c") / F.col("tc"), F.lit(0.0))
+    q = F.coalesce(F.col("d") / F.col("td"), F.lit(0.0))
+    m = (p + q) / 2.0
     # 0·log(0/m) := 0 — category absent on one side contributes only
     # through the other side's term
     term = lambda x: F.when(x > 0, x * F.log2(x / m)).otherwise(F.lit(0.0))  # noqa: E731
     return (
         pairs.groupBy(*part, "w_start")
         .agg(
-            (
-                F.sum(term(F.col("p"))) / 2.0 + F.sum(term(F.col("q"))) / 2.0
-            ).alias("js_divergence"),
-            (F.sum(F.abs(F.col("p") - F.col("q"))) / 2.0).alias("tvd"),
-            F.sum(F.col("in_cur").cast("long")).alias("n_categories"),
+            (F.sum(term(p)) / 2.0 + F.sum(term(q)) / 2.0).alias(
+                "js_divergence"
+            ),
+            (F.sum(F.abs(p - q)) / 2.0).alias("tvd"),
+            F.sum(F.col("c").isNotNull().cast("long")).alias("n_categories"),
         )
         .withColumnRenamed("w_start", "window_start")
     )
@@ -103,99 +175,17 @@ def numeric_drift_from_bin_counts(
     counts: DataFrame, part_cols: list[str] | tuple[str, ...] = ()
 ) -> DataFrame:
     """Histogram-distance drift series from pre-aggregated bin counts
-    ``(w_start, w_end, bin, n)`` — the numeric twin of
-    :func:`divergence_from_window_counts`, with the three standard
-    monitor distances between consecutive windows (TFDV ships L∞ as its
-    numeric-drift comparator; TVD is the L1 view; EMD — in BIN units —
-    is the 1-Wasserstein distance on the binned supports):
+    ``(*part_cols, w_start, w_end, bin, n)`` — the numeric twin of
+    :func:`divergence_from_window_counts`: L∞ / TVD / EMD between
+    consecutive windows (TFDV ships L∞ as its numeric-drift comparator;
+    TVD is the L1 view; EMD is the 1-Wasserstein distance in BIN units).
 
-    * ``linf = max_i |p_i − q_i|``
-    * ``tvd  = ½ Σ_i |p_i − q_i|``
-    * ``emd  = Σ_i |P_i − Q_i|``  (cumulative sums; last term is 0)
-
-    EXACT arithmetic: every distance is computed as a cross-multiplied
-    integer ratio — e.g. ``|c_i·T_q − d_i·T_p| / (T_p·T_q)`` — carried
-    in decimal(38,0) (counts up to 10^12 rows per window square to
-    10^24, far past BIGINT but well inside 38 digits), with ONE final
-    cast-to-double division. No float summation order exists anywhere,
-    so the series is partitioning-independent and a SQL oracle
-    reproduces it bit-for-bit.
-
-    Scale shape: identical to the categorical path — everything after
-    the first aggregation is O(#windows × n_bins). ``part_cols`` keeps
-    independent series per partition (the engine passes
-    ``partition_key``)."""
-    part = list(part_cols)
-    dec = "decimal(38,0)"
-    tot = Window.partitionBy(*part, "w_start")
-    wc = counts.withColumn(
-        "t", F.sum("n").over(tot).cast(dec)
-    ).withColumn("n", F.col("n").cast(dec))
-
-    cur = wc.select(
-        *part, "w_start", "bin", F.col("n").alias("c"),
-        F.col("t").alias("tc"),
-    )
-    prev = wc.select(
-        *part,
-        F.col("w_end").alias("w_start"),
-        "bin",
-        F.col("n").alias("d"),
-        F.col("t").alias("td"),
-    )
-    pairs = cur.join(prev, [*part, "w_start", "bin"], "full_outer")
-    per_w = Window.partitionBy(*part, "w_start")
-    pairs = (
-        pairs.withColumn("tc", F.max("tc").over(per_w))
-        .withColumn("td", F.max("td").over(per_w))
-        .filter(F.col("tc").isNotNull() & F.col("td").isNotNull())
-        .select(
-            *part,
-            "w_start",
-            "bin",
-            F.coalesce("c", F.lit(0).cast(dec)).alias("c"),
-            F.coalesce("d", F.lit(0).cast(dec)).alias("d"),
-            "tc",
-            "td",
-        )
-    )
-    # cross-multiplied per-bin term: c_i·T_q − d_i·T_p (exact integer)
-    diff = F.col("c") * F.col("td") - F.col("d") * F.col("tc")
-    by_bin = Window.partitionBy(*part, "w_start").orderBy("bin")
-    # bins absent on BOTH sides still carry the running |cum| into the
-    # EMD — weight each present bin's |cum| by the run of empty slots up
-    # to the next present bin (the last present bin's cum is exactly 0 —
-    # both cumulative counts reach T — so its weight is irrelevant)
-    gap_w = (
-        F.coalesce(F.lead("bin").over(by_bin), F.col("bin") + 1)
-        - F.col("bin")
-    ).cast(dec)
-    pairs = (
-        pairs.withColumn("x", diff)
-        .withColumn("cum", F.sum("x").over(by_bin))
-        .withColumn("gw", gap_w)
-    )
-    den = (F.col("tc") * F.col("td")).cast("double")
-    return (
-        pairs.groupBy(*part, "w_start")
-        .agg(
-            (F.max(F.abs(F.col("x"))).cast("double") / F.first(den)).alias(
-                "linf"
-            ),
-            (
-                F.sum(F.abs(F.col("x"))).cast(dec).cast("double")
-                / F.first(den)
-                / F.lit(2.0)
-            ).alias("tvd"),
-            (
-                F.sum(F.abs(F.col("cum")) * F.col("gw"))
-                .cast(dec)
-                .cast("double")
-                / F.first(den)
-            ).alias("emd"),
-            F.count(F.lit(1)).alias("n_bins_hit"),
-        )
-        .withColumnRenamed("w_start", "window_start")
+    A column projection of :func:`full_histogram_drift`, which holds the
+    formulas and the exact-arithmetic contract; Catalyst prunes the
+    unused PSI/chi² aggregates and the union-support window. Output:
+    (*part_cols, window_start, linf, tvd, emd, n_bins_hit)."""
+    return full_histogram_drift(counts, part_cols).select(
+        *part_cols, "window_start", "linf", "tvd", "emd", "n_bins_hit"
     )
 
 
@@ -211,123 +201,17 @@ def psi_chi2_from_bin_counts(
     scoring / model-monitoring default; chi-square is TFDV's categorical
     comparator). ``bin`` may be any equatable type — integer histogram
     bins or raw category values — since neither statistic needs an
-    ordering (unlike EMD/KS).
+    ordering (unlike EMD/KS); the ordered EMD window is pruned from this
+    projection's plan.
 
-    * ``psi  = Σ_i (p_i − q_i) · ln(p_i / q_i)``  (≥ 0, symmetric)
-    * ``chi2 = Σ_i (c'_i·T'_d − d'_i·T'_c)² / (T'_c·T'_d·(c'_i+d'_i))``
-      with ``n = T'_c + T'_d`` — the two-sample TEST OF HOMOGENEITY
-      statistic for the 2×B contingency table (pooled-margin expected
-      counts; algebraically equal to ``ΣΣ (O−E)²/E`` over both rows),
-      NOT the one-sided goodness-of-fit form, which is unbounded in n
-    * ``cramers_v = sqrt(chi2 / n)``  (≤ 1 for the 2×B table since
-      ``min(r−1, c−1) = 1`` — the scale-free view)
-
-    Zero-bin policy — both statistics blow up on bins present in only
-    one window, so counts are **add-α smoothed over the UNION support of
-    each window pair**: ``c' = c + α``, ``T'_c = T_c + α·B`` where B is
-    the number of distinct bins either window hit (and symmetrically for
-    the previous window). α is an integer (default 1) so smoothed counts
-    stay exact; at α=0 the chi-square/Cramér's V pair is still defined
-    (union support guarantees ``c+d ≥ 1``) and classic-unsmoothed, but
-    PSI requires shared support. The union-support convention makes the statistic a pure
-    function of the counts frame — reproducible by a SQL oracle.
-
-    Determinism contract (the repo's cross-engine float rule): the only
-    transcendental per bin is quantized BEFORE aggregation —
-    ``ln_micro = round(ln((c'·T'_d)/(d'·T'_c)) · 1e6)`` HALF_UP (the
-    double products/divisions are correctly-rounded IEEE, identical in
-    any engine), and the per-bin chi-square term
-    ``(c'·T'_d − d'·T'_c)² / (T'_c·T'_d·d')`` is likewise computed in
-    pinned-order doubles and quantized to micro-units. The PSI numerator
-    ``(c'·T'_d − d'·T'_c)`` is EXACT decimal(38,0); both sums run over
-    integers, so no float summation order exists anywhere and the series
-    is partitioning-independent.
-
-    Scale shape: identical to the siblings — everything after the
-    caller's first aggregation is O(#windows × #bins), alignment is an
-    equi-join of that bounded frame with itself shifted one window.
-
-    Output: (*part_cols, window_start, psi, chi2, cramers_v,
-    n_bins_union) — one row per window with a predecessor, ready for
-    ``drift.score_drift``.
+    A column projection of :func:`full_histogram_drift`, which holds the
+    formulas, the add-α zero-bin policy (``alpha`` a non-negative
+    integer) and the determinism contract. Output: (*part_cols,
+    window_start, psi, chi2, cramers_v, n_bins_union) — one row per
+    window with a predecessor, ready for ``drift.score_drift``.
     """
-    if alpha < 0:
-        raise ValueError("alpha must be a non-negative integer")
-    part = list(part_cols)
-    dec = "decimal(38,0)"
-    tot = Window.partitionBy(*part, "w_start")
-    wc = counts.withColumn(
-        "t", F.sum("n").over(tot).cast(dec)
-    ).withColumn("n", F.col("n").cast(dec))
-
-    cur = wc.select(
-        *part, "w_start", "bin", F.col("n").alias("c"),
-        F.col("t").alias("tc"),
-    )
-    prev = wc.select(
-        *part,
-        F.col("w_end").alias("w_start"),
-        "bin",
-        F.col("n").alias("d"),
-        F.col("t").alias("td"),
-    )
-    pairs = cur.join(prev, [*part, "w_start", "bin"], "full_outer")
-    per_w = Window.partitionBy(*part, "w_start")
-    a = F.lit(alpha).cast(dec)
-    pairs = (
-        pairs.withColumn("tc", F.max("tc").over(per_w))
-        .withColumn("td", F.max("td").over(per_w))
-        .filter(F.col("tc").isNotNull() & F.col("td").isNotNull())
-        .withColumn("b", F.count(F.lit(1)).over(per_w).cast(dec))
-        .select(
-            *part,
-            "w_start",
-            "bin",
-            (F.coalesce("c", F.lit(0).cast(dec)) + a).alias("c"),
-            (F.coalesce("d", F.lit(0).cast(dec)) + a).alias("d"),
-            (F.col("tc") + a * F.col("b")).alias("tc"),
-            (F.col("td") + a * F.col("b")).alias("td"),
-            "b",
-        )
-    )
-    # pinned-order doubles feeding the transcendental (each cast/product
-    # correctly rounded IEEE — identical in any engine)
-    cd, dd = F.col("c").cast("double"), F.col("d").cast("double")
-    tcd, tdd = F.col("tc").cast("double"), F.col("td").cast("double")
-    ln_micro = F.round(
-        F.log((cd * tdd) / (dd * tcd)) * F.lit(1e6), 0
-    ).cast(dec)
-    num = F.col("c") * F.col("td") - F.col("d") * F.col("tc")  # exact
-    n_both = (F.col("tc") + F.col("td")).cast("double")
-    chi2_micro = F.round(
-        num.cast("double")
-        * num.cast("double")
-        / (
-            F.col("tc") * F.col("td") * (F.col("c") + F.col("d"))
-        ).cast("double")
-        * F.lit(1e6),
-        0,
-    ).cast(dec)
-    den = (F.col("tc") * F.col("td")).cast("double")
-    return (
-        pairs.groupBy(*part, "w_start")
-        .agg(
-            (
-                F.sum(num * ln_micro).cast(dec).cast("double")
-                / F.first(den)
-                / F.lit(1e6)
-            ).alias("psi"),
-            (
-                F.sum(chi2_micro).cast(dec).cast("double") / F.lit(1e6)
-            ).alias("chi2"),
-            F.sqrt(
-                F.sum(chi2_micro).cast(dec).cast("double")
-                / F.lit(1e6)
-                / F.first(n_both)
-            ).alias("cramers_v"),
-            F.first(F.col("b").cast("long")).alias("n_bins_union"),
-        )
-        .withColumnRenamed("w_start", "window_start")
+    return full_histogram_drift(counts, part_cols, alpha).select(
+        *part_cols, "window_start", "psi", "chi2", "cramers_v", "n_bins_union"
     )
 
 
@@ -344,21 +228,9 @@ def numeric_window_psi(
     """Per-window PSI + chi-square + Cramér's V of ``value_col`` vs the
     PREVIOUS window, from raw rows (NULL/NaN excluded as in
     :func:`numeric_window_drift`, same fixed-width clamped binning)."""
-    counts = (
-        df.filter(
-            F.col(value_col).isNotNull() & ~F.isnan(F.col(value_col))
-        )
-        .groupBy(
-            F.window(ts_col, window).alias("w"),
-            numeric_bin(F.col(value_col), lo, hi, n_bins).alias("bin"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "bin",
-            "n",
-        )
+    v = F.col(value_col)
+    counts = _counts_from_rows(
+        df, ts_col, window, "bin", numeric_bin(v, lo, hi, n_bins), _finite(v)
     )
     return psi_chi2_from_bin_counts(counts, alpha=alpha)
 
@@ -390,39 +262,7 @@ def ks_drift_from_value_counts(
     window with a predecessor, ready for ``drift.score_drift``.
     """
     part = list(part_cols)
-    dec = "decimal(38,0)"
-    tot = Window.partitionBy(*part, "w_start")
-    wc = counts.withColumn(
-        "t", F.sum("n").over(tot).cast(dec)
-    ).withColumn("n", F.col("n").cast(dec))
-
-    cur = wc.select(
-        *part, "w_start", "value", F.col("n").alias("c"),
-        F.col("t").alias("tc"),
-    )
-    prev = wc.select(
-        *part,
-        F.col("w_end").alias("w_start"),
-        "value",
-        F.col("n").alias("d"),
-        F.col("t").alias("td"),
-    )
-    pairs = cur.join(prev, [*part, "w_start", "value"], "full_outer")
-    per_w = Window.partitionBy(*part, "w_start")
-    pairs = (
-        pairs.withColumn("tc", F.max("tc").over(per_w))
-        .withColumn("td", F.max("td").over(per_w))
-        .filter(F.col("tc").isNotNull() & F.col("td").isNotNull())
-        .select(
-            *part,
-            "w_start",
-            "value",
-            F.coalesce("c", F.lit(0).cast(dec)).alias("c"),
-            F.coalesce("d", F.lit(0).cast(dec)).alias("d"),
-            "tc",
-            "td",
-        )
-    )
+    pairs = _exact_window_pairs(counts, part, "value")
     by_val = Window.partitionBy(*part, "w_start").orderBy("value")
     diff = F.col("c") * F.col("td") - F.col("d") * F.col("tc")
     pairs = pairs.withColumn("cum", F.sum(diff).over(by_val))
@@ -449,22 +289,8 @@ def numeric_window_ks(
     window, from raw rows (NULL and NaN excluded, as in
     :func:`numeric_window_drift`). Best for discrete/quantized columns —
     see :func:`ks_drift_from_value_counts` for the cardinality caveat."""
-    counts = (
-        df.filter(
-            F.col(value_col).isNotNull() & ~F.isnan(F.col(value_col).cast("double"))
-        )
-        .groupBy(
-            F.window(ts_col, window).alias("w"),
-            F.col(value_col).alias("value"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "value",
-            "n",
-        )
-    )
+    v = F.col(value_col)
+    counts = _counts_from_rows(df, ts_col, window, "value", v, _finite(v))
     return ks_drift_from_value_counts(counts)
 
 
@@ -484,21 +310,9 @@ def numeric_window_drift(
     in the lowest bin and read as phantom drift toward bin 0). Output:
     (window_start, linf, tvd, emd, n_bins_hit) — one row per window
     with a predecessor, ready for ``drift.score_drift``."""
-    counts = (
-        df.filter(
-            F.col(value_col).isNotNull() & ~F.isnan(F.col(value_col))
-        )
-        .groupBy(
-            F.window(ts_col, window).alias("w"),
-            numeric_bin(F.col(value_col), lo, hi, n_bins).alias("bin"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "bin",
-            "n",
-        )
+    v = F.col(value_col)
+    counts = _counts_from_rows(
+        df, ts_col, window, "bin", numeric_bin(v, lo, hi, n_bins), _finite(v)
     )
     return numeric_drift_from_bin_counts(counts)
 
@@ -512,18 +326,7 @@ def categorical_window_divergence(
     """Per-window JS divergence + TVD of ``cat_col``'s distribution vs
     the PREVIOUS window, from raw rows. Output: (window_start,
     js_divergence, tvd, n_categories)."""
-    counts = (
-        df.groupBy(
-            F.window(ts_col, window).alias("w"), F.col(cat_col).alias("cat")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "cat",
-            "n",
-        )
-    )
+    counts = _counts_from_rows(df, ts_col, window, "cat", F.col(cat_col))
     return divergence_from_window_counts(counts)
 
 
@@ -561,7 +364,7 @@ def equi_depth_bounds(
     deterministically (the duplicated bins stay empty).
     """
     v = F.col(value_col)
-    clean = df.filter(v.isNotNull() & ~F.isnan(v.cast("double")))
+    clean = df.filter(_finite(v))
     qs = [i / n_bins for i in range(1, n_bins)]
     if not exact:
         row = clean.agg(
@@ -643,19 +446,9 @@ def numeric_window_drift_equidepth(
             df, value_col, n_bins, exact=exact_bounds
         )
     v = F.col(value_col)
-    counts = (
-        df.filter(v.isNotNull() & ~F.isnan(v.cast("double")))
-        .groupBy(
-            F.window(ts_col, window).alias("w"),
-            bin_by_bounds(v.cast("double"), bounds).alias("bin"),
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "bin",
-            "n",
-        )
+    counts = _counts_from_rows(
+        df, ts_col, window, "bin", bin_by_bounds(v.cast("double"), bounds),
+        _finite(v),
     )
     return numeric_drift_from_bin_counts(counts)
 
@@ -665,77 +458,98 @@ def full_histogram_drift(
     part_cols: list[str] | tuple[str, ...] = (),
     alpha: int = 1,
 ) -> DataFrame:
-    """The WHOLE histogram-drift battery in ONE alignment pass:
-    ``(*part_cols, window_start, linf, tvd, emd, psi, chi2, cramers_v,
-    n_bins_hit, n_bins_union)`` — value-identical to running
+    """The histogram-drift battery — the one implementation behind
     :func:`numeric_drift_from_bin_counts` and
-    :func:`psi_chi2_from_bin_counts` separately (test-pinned ``==``),
-    but the window-pair join, the per-window totals, and the per-bin
-    terms are built once. Exists because each separate series costs
-    ~0.5-1s of pure stage overhead on a 1M-row flagship even though the
-    frames are tiny — fusing them is free capability (the engine's
-    ``len_hist_emd`` + ``len_hist_psi`` stats ride one pass here).
+    :func:`psi_chi2_from_bin_counts` (both are column projections of
+    it). From bin counts ``(*part_cols, w_start, w_end, bin, n)`` under
+    the module's alignment contract, one row per window with a
+    predecessor: ``(*part_cols, window_start, linf, tvd, emd, psi, chi2,
+    cramers_v, n_bins_hit, n_bins_union)``. The window-pair join, the
+    per-window totals and the per-bin terms are built once, so the
+    engine's ``len_hist_emd`` + ``len_hist_psi`` stats ride one pass
+    (each separate tiny series costs ~0.5-1s of pure stage overhead on
+    a 1M-row flagship).
 
-    Same conventions as the parents: EMD/L∞/TVD on RAW counts with
-    gap-weighted sparse cumulative sums; PSI/chi²/V on add-α-smoothed
-    counts over the pair's union support with micro-quantized
-    transcendentals.
+    Raw-count distances (bins need an ordering and integer arithmetic
+    for EMD):
+
+    * ``linf = max_i |p_i − q_i|``
+    * ``tvd  = ½ Σ_i |p_i − q_i|``
+    * ``emd  = Σ_i |P_i − Q_i|``  (cumulative sums, in BIN units; the
+      last term is 0). Bins absent on BOTH sides still carry the
+      running ``|cum|``: each present bin's ``|cum|`` is weighted by
+      the run of empty slots up to the next present bin. NULL for bin
+      types without arithmetic (booleans, timestamps).
+
+    EXACT arithmetic: every distance is a cross-multiplied integer ratio
+    — e.g. ``|c_i·T_q − d_i·T_p| / (T_p·T_q)`` — carried in
+    decimal(38,0) (counts up to 10^12 rows per window square to 10^24,
+    far past BIGINT but well inside 38 digits), with ONE final
+    cast-to-double division. No float summation order exists anywhere,
+    so the series is partitioning-independent and a SQL oracle
+    reproduces it bit-for-bit.
+
+    Smoothed distances:
+
+    * ``psi  = Σ_i (p_i − q_i) · ln(p_i / q_i)``  (≥ 0, symmetric)
+    * ``chi2 = Σ_i (c'_i·T'_d − d'_i·T'_c)² / (T'_c·T'_d·(c'_i+d'_i))``
+      with ``n = T'_c + T'_d`` — the two-sample TEST OF HOMOGENEITY
+      statistic for the 2×B contingency table (pooled-margin expected
+      counts; algebraically equal to ``ΣΣ (O−E)²/E`` over both rows),
+      NOT the one-sided goodness-of-fit form, which is unbounded in n
+    * ``cramers_v = sqrt(chi2 / n)``  (≤ 1 for the 2×B table since
+      ``min(r−1, c−1) = 1`` — the scale-free view)
+
+    Zero-bin policy — both statistics blow up on bins present in only
+    one window, so counts are **add-α smoothed over the UNION support of
+    each window pair**: ``c' = c + α``, ``T'_c = T_c + α·B`` where B
+    (``n_bins_union``) is the number of distinct bins either window hit
+    (and symmetrically for the previous window). α is an integer
+    (default 1, negative raises ``ValueError``) so smoothed counts stay
+    exact; at α=0 the chi-square/Cramér's V pair is still defined (union
+    support guarantees ``c+d ≥ 1``) and classic-unsmoothed, but PSI
+    requires shared support. The union-support convention makes the
+    statistic a pure function of the counts frame — reproducible by a
+    SQL oracle.
+
+    Determinism contract (the repo's cross-engine float rule): the only
+    transcendental per bin is quantized BEFORE aggregation —
+    ``ln_micro = round(ln((c'·T'_d)/(d'·T'_c)) · 1e6)`` HALF_UP (the
+    double products/divisions are correctly-rounded IEEE, identical in
+    any engine), and the per-bin chi-square term is likewise computed in
+    pinned-order doubles and quantized to micro-units. The PSI numerator
+    ``(c'·T'_d − d'·T'_c)`` is EXACT decimal(38,0); both sums run over
+    integers, so no float summation order exists anywhere and the series
+    is partitioning-independent.
     """
     if alpha < 0:
         raise ValueError("alpha must be a non-negative integer")
     part = list(part_cols)
-    dec = "decimal(38,0)"
-    tot = Window.partitionBy(*part, "w_start")
-    wc = counts.withColumn(
-        "t", F.sum("n").over(tot).cast(dec)
-    ).withColumn("n", F.col("n").cast(dec))
-
-    cur = wc.select(
-        *part, "w_start", "bin", F.col("n").alias("c"),
-        F.col("t").alias("tc"),
-    )
-    prev = wc.select(
-        *part,
-        F.col("w_end").alias("w_start"),
-        "bin",
-        F.col("n").alias("d"),
-        F.col("t").alias("td"),
-    )
-    pairs = cur.join(prev, [*part, "w_start", "bin"], "full_outer")
     per_w = Window.partitionBy(*part, "w_start")
-    pairs = (
-        pairs.withColumn("tc", F.max("tc").over(per_w))
-        .withColumn("td", F.max("td").over(per_w))
-        .filter(F.col("tc").isNotNull() & F.col("td").isNotNull())
-        .withColumn("b", F.count(F.lit(1)).over(per_w).cast(dec))
-        .select(
-            *part,
-            "w_start",
-            "bin",
-            F.coalesce("c", F.lit(0).cast(dec)).alias("c"),
-            F.coalesce("d", F.lit(0).cast(dec)).alias("d"),
-            "tc",
-            "td",
-            "b",
-        )
+    pairs = _exact_window_pairs(counts, part, "bin").withColumn(
+        "b", F.count(F.lit(1)).over(per_w).cast(DEC)
     )
-    # --- raw-count branch (identical to numeric_drift_from_bin_counts)
+    # --- raw-count distances: c_i·T_q − d_i·T_p (exact integer)
     diff = F.col("c") * F.col("td") - F.col("d") * F.col("tc")
-    by_bin = Window.partitionBy(*part, "w_start").orderBy("bin")
+    by_bin = per_w.orderBy("bin")
+    # the last present bin's cum is exactly 0 (both cumulative counts
+    # reach T), so its gap weight is irrelevant
     gap_w = (
         F.coalesce(F.lead("bin").over(by_bin), F.col("bin") + 1)
         - F.col("bin")
-    ).cast(dec)
-    # --- smoothed branch (identical to psi_chi2_from_bin_counts)
-    a = F.lit(alpha).cast(dec)
+    ).cast(DEC)
+    # --- add-α smoothed distances
+    a = F.lit(alpha).cast(DEC)
     cs, ds = F.col("c") + a, F.col("d") + a
     tcs = F.col("tc") + a * F.col("b")
     tds = F.col("td") + a * F.col("b")
+    # pinned-order doubles feeding the transcendental (each cast/product
+    # correctly rounded IEEE — identical in any engine)
     csd, dsd = cs.cast("double"), ds.cast("double")
     tcsd, tdsd = tcs.cast("double"), tds.cast("double")
     ln_micro = F.round(
         F.log((csd * tdsd) / (dsd * tcsd)) * F.lit(1e6), 0
-    ).cast(dec)
+    ).cast(DEC)
     num_s = cs * tds - ds * tcs
     chi2_micro = F.round(
         num_s.cast("double")
@@ -743,47 +557,46 @@ def full_histogram_drift(
         / (tcs * tds * (cs + ds)).cast("double")
         * F.lit(1e6),
         0,
-    ).cast(dec)
+    ).cast(DEC)
+    pairs = pairs.withColumn("x", diff).withColumn(
+        "cum", F.sum("x").over(by_bin)
+    )
+    try:
+        pairs = pairs.withColumn("gw", gap_w)
+    except AnalysisException:
+        # bins without arithmetic (booleans, timestamps) have no EMD;
+        # PSI/chi² only need bin equality and stay defined
+        pairs = pairs.withColumn("gw", F.lit(None).cast(DEC))
     pairs = (
-        pairs.withColumn("x", diff)
-        .withColumn("cum", F.sum("x").over(by_bin))
-        .withColumn("gw", gap_w)
-        .withColumn("psi_term", num_s * ln_micro)
+        pairs.withColumn("psi_term", num_s * ln_micro)
         .withColumn("chi_term", chi2_micro)
         .withColumn("sden", (tcs * tds).cast("double"))
         .withColumn("snb", (tcs + tds).cast("double"))
     )
-    den = (F.col("tc") * F.col("td")).cast("double")
+    den = F.first((F.col("tc") * F.col("td")).cast("double"))
+    chi2 = F.sum("chi_term").cast(DEC).cast("double") / F.lit(1e6)
     return (
         pairs.groupBy(*part, "w_start")
         .agg(
-            (F.max(F.abs(F.col("x"))).cast("double") / F.first(den)).alias(
-                "linf"
-            ),
+            (F.max(F.abs(F.col("x"))).cast("double") / den).alias("linf"),
             (
-                F.sum(F.abs(F.col("x"))).cast(dec).cast("double")
-                / F.first(den)
+                F.sum(F.abs(F.col("x"))).cast(DEC).cast("double")
+                / den
                 / F.lit(2.0)
             ).alias("tvd"),
             (
                 F.sum(F.abs(F.col("cum")) * F.col("gw"))
-                .cast(dec)
+                .cast(DEC)
                 .cast("double")
-                / F.first(den)
+                / den
             ).alias("emd"),
             (
-                F.sum("psi_term").cast(dec).cast("double")
+                F.sum("psi_term").cast(DEC).cast("double")
                 / F.first(F.col("sden"))
                 / F.lit(1e6)
             ).alias("psi"),
-            (
-                F.sum("chi_term").cast(dec).cast("double") / F.lit(1e6)
-            ).alias("chi2"),
-            F.sqrt(
-                F.sum("chi_term").cast(dec).cast("double")
-                / F.lit(1e6)
-                / F.first(F.col("snb"))
-            ).alias("cramers_v"),
+            chi2.alias("chi2"),
+            F.sqrt(chi2 / F.first(F.col("snb"))).alias("cramers_v"),
             F.count(F.lit(1)).alias("n_bins_hit"),
             F.first(F.col("b").cast("long")).alias("n_bins_union"),
         )
@@ -805,16 +618,16 @@ def topk_churn(
     :func:`divergence_from_window_counts` — ``(*part_cols, w_start,
     w_end, cat, n)``. Per window the top-k categories are chosen by
     ``(n desc, cat asc)`` row_number — a fully deterministic total
-    order, so the SET is a pure function of the counts. Consecutive
-    windows align on ``prev.w_end == cur.w_start`` (equi-join, the
-    house pairing rule), and the output per current window is::
+    order, so the SET is a pure function of the counts. The top-k rows
+    then pair under the module's alignment contract (a window's
+    presence is that of its top-k rows), and the output per current
+    window is::
 
         (*part_cols, window_start, jaccard, n_kept, n_new, n_dropped,
          k_cur, k_prev)
 
     with ``jaccard = |cur ∩ prev| / |cur ∪ prev|`` — exact integers,
-    ONE final double division. First windows (no predecessor) are
-    omitted, like every drift operator here.
+    ONE final double division.
 
     Scale shape: everything after the caller's counts aggregation is
     O(windows × k): the top-k is a window row_number over the bounded
@@ -824,52 +637,17 @@ def topk_churn(
     w = Window.partitionBy(*part, "w_start").orderBy(
         F.col("n").desc(), F.col("cat").asc()
     )
-    tops = (
-        counts.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .select(*part, "w_start", "w_end", "cat")
+    tops = counts.withColumn("_rk", F.row_number().over(w)).filter(
+        F.col("_rk") <= k
     )
-    cur = tops.select(*part, "w_start", "cat").withColumn(
-        "_in_cur", F.lit(1)
-    )
-    prev = tops.select(
-        *part, F.col("w_end").alias("w_start"), "cat"
-    ).withColumn("_in_prev", F.lit(1))
-    both = cur.join(prev, [*part, "w_start", "cat"], "full_outer")
-    # restrict to windows that exist on BOTH sides (the full-outer join
-    # also manufactures rows for the first window of each series and
-    # for prev's successor slot past the last window)
-    has = Window.partitionBy(*part, "w_start")
-    both = (
-        both.withColumn(
-            "_w_cur", F.max(F.coalesce("_in_cur", F.lit(0))).over(has)
-        )
-        .withColumn(
-            "_w_prev", F.max(F.coalesce("_in_prev", F.lit(0))).over(has)
-        )
-        .filter((F.col("_w_cur") == 1) & (F.col("_w_prev") == 1))
-    )
-    inter = F.sum(
-        (
-            F.col("_in_cur").isNotNull() & F.col("_in_prev").isNotNull()
-        ).cast("long")
-    )
-    n_new = F.sum(
-        (
-            F.col("_in_cur").isNotNull() & F.col("_in_prev").isNull()
-        ).cast("long")
-    )
-    n_dropped = F.sum(
-        (
-            F.col("_in_cur").isNull() & F.col("_in_prev").isNotNull()
-        ).cast("long")
-    )
+    in_cur, in_prev = F.col("c").isNotNull(), F.col("d").isNotNull()
     return (
-        both.groupBy(*part, "w_start")
+        _window_pairs(tops, part, "cat")
+        .groupBy(*part, "w_start")
         .agg(
-            inter.alias("n_kept"),
-            n_new.alias("n_new"),
-            n_dropped.alias("n_dropped"),
+            F.sum((in_cur & in_prev).cast("long")).alias("n_kept"),
+            F.sum((in_cur & ~in_prev).cast("long")).alias("n_new"),
+            F.sum((~in_cur & in_prev).cast("long")).alias("n_dropped"),
         )
         .select(
             *part,
@@ -900,8 +678,8 @@ def divergence_attribution(
     distribution drifted at window w"; this says "because zh doubled
     and en shrank").
 
-    Input: the counts frame ``(*part_cols, w_start, w_end, cat, n)``.
-    Per category the TVD contribution is ``|p_cur − p_prev| / 2``; its
+    Input: the counts frame ``(*part_cols, w_start, w_end, cat, n)``,
+    paired under the module's alignment contract. Per category the TVD contribution is ``|p_cur − p_prev| / 2``; its
     SHARE is that over the window's TVD. Both reduce to the exact
     cross-multiplied integer ``|c·T_p − d·T_c|`` (c, d the category
     counts; T the window totals), so share = that integer over the
@@ -916,34 +694,8 @@ def divergence_attribution(
     aggregation — the same bounded frame every divergence here walks.
     """
     part = list(part_cols)
-    dec = "decimal(38,0)"
-    tot = Window.partitionBy(*part, "w_start")
-    wc = counts.withColumn(
-        "t", F.sum("n").over(tot).cast(dec)
-    ).withColumn("n", F.col("n").cast(dec))
-
-    cur = wc.select(
-        *part, "w_start", "cat",
-        F.col("n").alias("c"), F.col("t").alias("tc"),
-    )
-    prev = wc.select(
-        *part,
-        F.col("w_end").alias("w_start"),
-        "cat",
-        F.col("n").alias("d"),
-        F.col("t").alias("td"),
-    )
-    pairs = cur.join(prev, [*part, "w_start", "cat"], "full_outer")
     has = Window.partitionBy(*part, "w_start")
-    pairs = (
-        pairs.withColumn("_hc", F.max(F.col("tc").isNotNull().cast("int")).over(has))
-        .withColumn("_hp", F.max(F.col("td").isNotNull().cast("int")).over(has))
-        .filter((F.col("_hc") == 1) & (F.col("_hp") == 1))
-        .withColumn("tc", F.max("tc").over(has))
-        .withColumn("td", F.max("td").over(has))
-        .withColumn("c", F.coalesce("c", F.lit(0).cast(dec)))
-        .withColumn("d", F.coalesce("d", F.lit(0).cast(dec)))
-    )
+    pairs = _exact_window_pairs(counts, part, "cat")
     dev = F.col("c") * F.col("td") - F.col("d") * F.col("tc")
     pairs = (
         pairs.withColumn("_dev", dev)
@@ -954,9 +706,7 @@ def divergence_attribution(
     )
     # share ordering ≡ |dev| ordering within a window (the denominator
     # is constant per window) — rank on the exact integer, divide later
-    w_rank = Window.partitionBy(*part, "w_start").orderBy(
-        F.abs(F.col("_dev")).desc(), F.col("cat").asc()
-    )
+    w_rank = has.orderBy(F.abs(F.col("_dev")).desc(), F.col("cat").asc())
     ranked = pairs.withColumn("rank", F.row_number().over(w_rank)).filter(
         F.col("rank") <= top_n
     )
@@ -1009,24 +759,18 @@ def numeric_window_corr(
     windows × partitions.
     """
     part = list(part_cols)
-    dec = "decimal(38,0)"
 
     def _micro(c):
-        return F.round(F.col(c).cast("double") * F.lit(1e6), 0).cast(dec)
+        return F.round(F.col(c).cast("double") * F.lit(1e6), 0).cast(DEC)
 
-    rows = df.filter(
-        F.col(col_a).isNotNull()
-        & F.col(col_b).isNotNull()
-        & ~F.isnan(F.col(col_a).cast("double"))
-        & ~F.isnan(F.col(col_b).cast("double"))
-    ).select(
+    rows = df.filter(_finite(F.col(col_a)) & _finite(F.col(col_b))).select(
         *part,
         F.window(ts_col, window).alias("w"),
         _micro(col_a).alias("_aq"),
         _micro(col_b).alias("_bq"),
     )
     agg = rows.groupBy(*part, "w").agg(
-        F.count(F.lit(1)).cast(dec).alias("_n"),
+        F.count(F.lit(1)).cast(DEC).alias("_n"),
         F.sum("_aq").alias("_sa"),
         F.sum("_bq").alias("_sb"),
         F.sum(F.col("_aq") * F.col("_aq")).alias("_sa2"),

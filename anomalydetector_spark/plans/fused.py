@@ -26,9 +26,9 @@ suite to its information-theoretic minimum:
   profile derive (a) duplicate keys + per-partition duplicate-row counts
   (the uniqueness verdict), and (b) EXACT per-window distinct-url counts
   (the ``distinct_url`` drift series) — the distinct-count shuffle is
-  already paid for by the uniqueness check, so exactness is free and the
-  HLL sketch (kept in stats.compute_window_stats for stats-only runs) is
-  not needed here.
+  already paid for by the uniqueness check, so exactness is free and no
+  HLL sketch is needed here (the mergeable HLL for resumable and
+  cross-snapshot distinct counts lives in plans/sketches.py).
 
 Violation-row extraction still reads the input (it must — the rows are
 the output), but only in the violations DAG, which the caller

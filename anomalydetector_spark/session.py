@@ -16,6 +16,24 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MIB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 40% of the
+    host's ``MemTotal``, capped at 48g. A fixed 48g heap on a smaller
+    host lets the JVM grow until the kernel OOM-kills it; 40% leaves
+    room for the JVM's off-heap memory and the Python workers. Hosts
+    without ``/proc/meminfo`` get the cap."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(
+                int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return f"{_MAX_DRIVER_MIB}m"
+    return f"{max(1024, min(_MAX_DRIVER_MIB, kib * 4 // 10 // 1024))}m"
+
 
 def get_spark(
     app_name: str = "anomalydetector_spark",
@@ -53,7 +71,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

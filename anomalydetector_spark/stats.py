@@ -1,127 +1,22 @@
-"""Per-window column-stats pass — the front half of the drift check.
+"""Partition keys for the per-window stat series.
 
-One **single scan + one shuffle** computes every per-window statistic the
-drift checks consume (SURVEY.md §4 item 2: multi-query sharing is our
-engine's planning decision — all stats ride one ``groupBy``). The result
-is a long-format stat-series table (FIXTURES.md F4):
+The stat series themselves are rollups of the engine's fused counts
+cube and url profile (plans/fused.py) — one long-format table
+(FIXTURES.md F4):
 
     partition_key string, stat_name string, window_start timestamp,
     value double
 
-which is tiny (windows × partitions × stats rows) regardless of input
-size — that's what makes SR scoring O(windows), not O(docs), and keeps the
-design scale-invariant at 10^12 docs.
-
-Column pruning matters at 100 TB: this pass never touches ``html`` binary
-— only ``warc_ts, text, lang, url`` reach the scan (verify with
-``.explain`` → ReadSchema).
+that is tiny (windows × partitions × stats rows) regardless of input
+size. This module holds the partition-key expression: add it as a
+column and name that column in ``ValidationConfig.partition_by`` to get
+one series per key.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-DEFAULT_LANGS = ("en", "de", "fr", "zh", "es")
-
-STAT_SERIES_SCHEMA = (
-    "partition_key string, stat_name string, window_start timestamp, value double"
-)
-
-
-def compute_window_stats(
-    pages: DataFrame,
-    window_duration: str = "1 day",
-    partition_by: Column | str | None = None,
-    langs: tuple[str, ...] = DEFAULT_LANGS,
-    ts_col: str = "warc_ts",
-) -> DataFrame:
-    """Aggregate per-window column stats and unpivot to long format.
-
-    Stats (names are the stat-series keys consumed by the SR drift check):
-      doc_count, null_rate, len_p50, len_p95, approx_distinct_url,
-      lang_frac_<l> for each l in ``langs``.
-
-    ``partition_by`` defaults to a single global partition; pass a column
-    (e.g. a domain bucket) for per-partition series. Quantiles use
-    ``percentile_approx`` (t-digest, mergeable map-side) and distinct urls
-    use ``approx_count_distinct`` (HLL) — both partial-aggregate before the
-    shuffle, so the reduce side only sees sketches.
-    """
-    part = (
-        F.lit("global")
-        if partition_by is None
-        else (F.col(partition_by) if isinstance(partition_by, str) else partition_by)
-    )
-
-    # Quantiles deliberately do NOT use percentile_approx here: a
-    # TypedImperativeAggregate in the shared agg forces the whole pass
-    # onto ObjectHashAggregate (no whole-stage codegen) — measured 10×
-    # slower at 4M rows. Text lengths are bounded ints, so EXACT quantiles
-    # come cheaper from a two-phase length histogram:
-    #   groupBy(window, partition, len).count  (codegen hash agg)
-    #   → cumulative count over len → inverse-CDF lookup.
-    # The histogram is O(windows × partitions × distinct lengths) rows —
-    # tiny — and both phases stay in codegen.
-    aggs = [
-        F.count(F.lit(1)).cast("double").alias("doc_count"),
-        F.avg(F.col("text").isNull().cast("double")).alias("null_rate"),
-        F.approx_count_distinct("url").cast("double").alias("approx_distinct_url"),
-    ]
-    for lang in langs:
-        aggs.append(
-            F.avg((F.col("lang") == lang).cast("double")).alias(f"lang_frac_{lang}")
-        )
-
-    keyed = pages.withColumn("partition_key", part).withColumn(
-        "w", F.window(F.col(ts_col), window_duration)
-    )
-    wide = (
-        keyed.groupBy("w", "partition_key")
-        .agg(*aggs)
-        .withColumn("window_start", F.col("w.start"))
-        .drop("w")
-    )
-
-    hist = (
-        keyed.filter(F.col("text").isNotNull())
-        .groupBy("w", "partition_key", F.length("text").alias("_len"))
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    cum_w = (
-        Window.partitionBy("w", "partition_key")
-        .orderBy("_len")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    tot_w = Window.partitionBy("w", "partition_key")
-    cum = hist.withColumn("_cum", F.sum("_n").over(cum_w)).withColumn(
-        "_tot", F.sum("_n").over(tot_w)
-    )
-    quants = (
-        cum.groupBy("w", "partition_key")
-        .agg(
-            F.min(
-                F.when(F.col("_cum") >= F.ceil(F.col("_tot") * 0.5), F.col("_len"))
-            ).cast("double").alias("len_p50"),
-            F.min(
-                F.when(F.col("_cum") >= F.ceil(F.col("_tot") * 0.95), F.col("_len"))
-            ).cast("double").alias("len_p95"),
-        )
-        .withColumn("window_start", F.col("w.start"))
-        .drop("w")
-    )
-
-    wide = wide.join(quants, ["partition_key", "window_start"], "left").fillna(
-        {"len_p50": 0.0, "len_p95": 0.0}
-    )
-
-    stat_cols = [c for c in wide.columns if c not in ("partition_key", "window_start")]
-    return wide.unpivot(
-        ids=["partition_key", "window_start"],
-        values=stat_cols,
-        variableColumnName="stat_name",
-        valueColumnName="value",
-    ).select("partition_key", "stat_name", "window_start", "value")
 
 
 def domain_bucket(n_buckets: int = 8, domain_col: str = "domain") -> Column:

@@ -110,6 +110,20 @@ def test_batch_size_validation():
     C.validate_batch_size(100)
 
 
+def test_engine_rejects_sr_batch_below_min_points(spark):
+    # the same contract as the reference and `cli detect`: an SR batch
+    # below MIN_POINTS raises instead of being clamped by the kernel
+    from anomalydetector_spark.engine import ValidationConfig, run_validation
+    from anomalydetector_spark.kernel.sr import SrParams
+
+    pages = spark.createDataFrame(
+        [], "url string, warc_ts timestamp, html binary, text string, lang string"
+    )
+    with pytest.raises(ValueError) as exc:
+        run_validation(pages, config=ValidationConfig(sr=SrParams(batch_size=5)))
+    assert str(exc.value) == errors.INVALID_BATCH_SIZE.format(12)
+
+
 def test_unique_key_check(spark):
     df = spark.createDataFrame(
         [("a", "u1"), ("a", "u1"), ("a", "u2"), ("b", "u3")],

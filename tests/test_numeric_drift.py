@@ -388,6 +388,29 @@ def test_psi_alpha_zero_shared_support(spark):
     assert _run_psi(spark, rows, alpha=0) == psi_py(rows, alpha=0)
 
 
+def test_psi_bins_need_only_equality(spark):
+    # PSI/chi² read bins by equality alone: boolean bins (no arithmetic,
+    # so no EMD) score exactly like the same counts on 0/1 integer bins
+    from anomalydetector_spark.operators.divergence import (
+        psi_chi2_from_bin_counts,
+    )
+
+    rows = [
+        (T0 + dt.timedelta(days=d), T0 + dt.timedelta(days=d + 1), b, n)
+        for d, b, n in [(0, 0, 7), (0, 1, 3), (1, 0, 4), (1, 1, 6),
+                        (2, 1, 9)]
+    ]
+    ints = spark.createDataFrame(
+        rows, "w_start timestamp, w_end timestamp, bin int, n long"
+    )
+    bools = ints.withColumn("bin", F.col("bin") == 1)
+    got = sorted(tuple(r) for r in psi_chi2_from_bin_counts(bools).collect())
+    assert got == sorted(
+        tuple(r) for r in psi_chi2_from_bin_counts(ints).collect()
+    )
+    assert len(got) == 2
+
+
 # ---- equi-depth binning (equi_depth_bounds / bin_by_bounds) ----
 
 from anomalydetector_spark.operators.divergence import (  # noqa: E402

@@ -53,6 +53,14 @@ def test_unknown_field_rejected_loudly():
         config_from_dict(["window"])
 
 
+def test_top_level_batch_size_rejected():
+    # SR batching lives under "drift"; a top-level knob nothing reads
+    # must fail loudly instead of silently doing nothing
+    with pytest.raises(ValueError, match="unknown suite field 'batch_size'"):
+        config_from_dict({"batch_size": 500})
+    assert config_from_dict({"drift": {"batch_size": 500}}).sr.batch_size == 500
+
+
 def test_round_trip():
     cfg = ValidationConfig(
         window_duration="2 hours", min_points=5, langs=("zh",)

@@ -72,7 +72,7 @@ def main() -> None:
 
     from anomalydetector_spark.session import get_spark
     from anomalydetector_spark import datagen
-    from anomalydetector_spark.stats import compute_window_stats
+    from anomalydetector_spark.engine import ValidationConfig, run_validation
     from anomalydetector_spark.operators.referential import check_referential
     from anomalydetector_spark.operators.uniqueness import check_unique_key
 
@@ -86,18 +86,23 @@ def main() -> None:
 
     ok = True
 
-    stats_plan = plan_of(compute_window_stats(pages))
+    # the stats pass the engine runs: every stat series is a rollup of
+    # the fused counts cube / url profile scans
+    stats_res = run_validation(pages, domains, ValidationConfig())
+    stats_plan = plan_of(stats_res.stat_series)
+    read_schemas = [
+        seg.split("\n")[0] for seg in stats_plan.split("ReadSchema")[1:]
+    ]
     ok &= check(
         "stats pass prunes html from the scan",
-        "html" not in stats_plan.split("ReadSchema")[1].split("\n")[0]
-        if "ReadSchema" in stats_plan
-        else False,
-        "ReadSchema excludes html binary",
+        bool(read_schemas) and all("html" not in r for r in read_schemas),
+        f"{len(read_schemas)} ReadSchema(s) exclude html binary",
     )
     ok &= check(
         "stats pass partial-aggregates before shuffle",
         "partial" in stats_plan.lower(),
     )
+    stats_res.unpersist()
 
     ref_plan = plan_of(
         check_referential(pages, "domain", domains, "domain").violations
@@ -109,7 +114,6 @@ def main() -> None:
     ok &= check("duplicate-violation join is broadcast", "Broadcast" in uniq_plan)
 
     # the fused engine path: cube + profile + one-scan violations
-    from anomalydetector_spark.engine import ValidationConfig, run_validation
     from anomalydetector_spark.plans import fused
 
     keyed = fused.keyed_input(pages, "1 day", None)
