@@ -1272,6 +1272,37 @@ def cmd_evaluate(args, spark: SparkSession) -> None:
     )
 
 
+def _stage2_source(spark: SparkSession, path: str, schema: str) -> DataFrame:
+    """A stage-2 file source over a stage-1 output directory. The file
+    source requires its path to EXIST at construction time (the schema
+    is supplied, but Spark still validates the path) — on a fresh output
+    dir stage 1 hasn't created it yet — so bare paths and ``file:`` URIs
+    are created first; other schemes (object stores) treat a missing
+    prefix as an empty listing, not an error."""
+    if "://" not in path:
+        os.makedirs(path, exist_ok=True)
+    elif path.startswith("file:"):
+        from urllib.parse import urlparse
+
+        # urlparse handles both file:///abs and authority-bearing
+        # file://localhost/abs — a naive prefix strip turned the latter
+        # into a bogus relative path
+        os.makedirs(urlparse(path).path, exist_ok=True)
+    return spark.readStream.schema(schema).parquet(path)
+
+
+def _parquet_sink(df: DataFrame, path: str, checkpoint: str, partition_by=None):
+    """Append-mode parquet ``writeStream`` with its own checkpoint."""
+    w = df.writeStream.format("parquet")
+    if partition_by is not None:
+        w = w.partitionBy(partition_by)
+    return (
+        w.option("path", path)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+    )
+
+
 def cmd_stream_validate(args, spark: SparkSession) -> None:
     """Two chained streaming stages (streaming/drift_stream.py): stats →
     SR scoring, each with its own checkpoint under ``--checkpoint`` so
@@ -1309,39 +1340,19 @@ def cmd_stream_validate(args, spark: SparkSession) -> None:
         watermark_delay=None if dedup else args.watermark,
         partition_by=args.partition_by,
     )
-    w1 = (
-        stats.writeStream.format("parquet")
-        .option("path", f"{out}/stat_series")
-        .option("checkpointLocation", f"{ckpt}/stats")
-        .outputMode("append")
-    )
+    w1 = _parquet_sink(stats, f"{out}/stat_series", f"{ckpt}/stats")
 
-    stat_schema = (
-        "partition_key string, stat_name string, "
-        "window_start timestamp, value double"
-    )
-    # the stage-2 file source requires its input path to EXIST at
-    # construction time (schema is supplied, but Spark still validates
-    # the path) — on a fresh output dir stage 1 hasn't created it yet.
-    # file:// URIs get the same treatment; other schemes (object stores)
-    # treat a missing prefix as an empty listing, not an error.
-    if "://" not in out:
-        os.makedirs(f"{out}/stat_series", exist_ok=True)
-    elif out.startswith("file:"):
-        from urllib.parse import urlparse
+    def stat_series():
+        return _stage2_source(
+            spark,
+            f"{out}/stat_series",
+            "partition_key string, stat_name string, "
+            "window_start timestamp, value double",
+        )
 
-        # urlparse handles both file:///abs and authority-bearing
-        # file://localhost/abs — a naive prefix strip turned the latter
-        # into a bogus relative path
-        os.makedirs(f"{urlparse(out).path}/stat_series", exist_ok=True)
-    scored = sr_score_stream(
-        spark.readStream.schema(stat_schema).parquet(f"{out}/stat_series")
-    )
-    w2 = (
-        scored.writeStream.format("parquet")
-        .option("path", f"{out}/drift_scores")
-        .option("checkpointLocation", f"{ckpt}/scores")
-        .outputMode("append")
+    w2 = _parquet_sink(
+        sr_score_stream(stat_series()), f"{out}/drift_scores",
+        f"{ckpt}/scores",
     )
 
     w3 = None
@@ -1349,15 +1360,9 @@ def cmd_stream_validate(args, spark: SparkSession) -> None:
         from anomalydetector_spark.streaming import js_divergence_stream
 
         shape = js_divergence_stream(
-            spark.readStream.schema(stat_schema).parquet(f"{out}/stat_series"),
-            window_duration=args.window,
+            stat_series(), window_duration=args.window
         )
-        w3 = (
-            shape.writeStream.format("parquet")
-            .option("path", f"{out}/shape_drift")
-            .option("checkpointLocation", f"{ckpt}/shape")
-            .outputMode("append")
-        )
+        w3 = _parquet_sink(shape, f"{out}/shape_drift", f"{ckpt}/shape")
 
     # ---- round-3 twins behind CLI flags (judge round-4 item #7) ----
     # stage-1 extras ride the RAW input stream with their own watermark
@@ -1382,12 +1387,7 @@ def cmd_stream_validate(args, spark: SparkSession) -> None:
             partition_by=args.partition_by,
             ts_col="warc_ts",
         )
-        w_topk = (
-            topk.writeStream.format("parquet")
-            .option("path", f"{out}/topk")
-            .option("checkpointLocation", f"{ckpt}/topk")
-            .outputMode("append")
-        )
+        w_topk = _parquet_sink(topk, f"{out}/topk", f"{ckpt}/topk")
     if getattr(args, "window_corr", None):
         from anomalydetector_spark.streaming import streaming_window_corr
 
@@ -1410,12 +1410,7 @@ def cmd_stream_validate(args, spark: SparkSession) -> None:
             partition_by=args.partition_by,
             ts_col="warc_ts",
         )
-        w_corr = (
-            corr.writeStream.format("parquet")
-            .option("path", f"{out}/window_corr")
-            .option("checkpointLocation", f"{ckpt}/corr")
-            .outputMode("append")
-        )
+        w_corr = _parquet_sink(corr, f"{out}/window_corr", f"{ckpt}/corr")
 
     w_seasonal = None
     if getattr(args, "seasonal", False):
@@ -1423,43 +1418,33 @@ def cmd_stream_validate(args, spark: SparkSession) -> None:
             seasonal_expectation_stream,
         )
 
-        w_seasonal = (
-            seasonal_expectation_stream(
-                spark.readStream.schema(stat_schema).parquet(
-                    f"{out}/stat_series"
-                ),
-                season_lag=args.season_lag,
-                n_seasons=args.season_n,
-                window_duration=args.window,
-                buffer_windows=args.stream_buffer_windows,
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{out}/seasonal")
-            .option("checkpointLocation", f"{ckpt}/seasonal")
-            .outputMode("append")
+        seasonal = seasonal_expectation_stream(
+            stat_series(),
+            season_lag=args.season_lag,
+            n_seasons=args.season_n,
+            window_duration=args.window,
+            buffer_windows=args.stream_buffer_windows,
+        )
+        w_seasonal = _parquet_sink(
+            seasonal, f"{out}/seasonal", f"{ckpt}/seasonal"
         )
 
     w_churn = None
     if w_topk is not None:
         from anomalydetector_spark.streaming import topk_churn_stream
 
-        topk_schema = (
+        topk_rows = _stage2_source(
+            spark,
+            f"{out}/topk",
             "partition_key string, window_start timestamp, "
-            "topk array<string>"
+            "topk array<string>",
         )
-        if "://" not in out:
-            os.makedirs(f"{out}/topk", exist_ok=True)
-        w_churn = (
-            topk_churn_stream(
-                spark.readStream.schema(topk_schema).parquet(f"{out}/topk"),
-                window_duration=args.window,
-                buffer_windows=args.stream_buffer_windows,
-            )
-            .writeStream.format("parquet")
-            .option("path", f"{out}/topk_churn")
-            .option("checkpointLocation", f"{ckpt}/churn")
-            .outputMode("append")
+        churn = topk_churn_stream(
+            topk_rows,
+            window_duration=args.window,
+            buffer_windows=args.stream_buffer_windows,
         )
+        w_churn = _parquet_sink(churn, f"{out}/topk_churn", f"{ckpt}/churn")
 
     w_robots = None
     if getattr(args, "robots_gate", None):
@@ -1487,11 +1472,8 @@ def cmd_stream_validate(args, spark: SparkSession) -> None:
             "url", "domain", "path", "matched_pattern", "matched_type",
             "crawl_allowed",
         )
-        w_robots = (
-            gated.writeStream.format("parquet")
-            .option("path", f"{out}/robots_gate")
-            .option("checkpointLocation", f"{ckpt}/robots")
-            .outputMode("append")
+        w_robots = _parquet_sink(
+            gated, f"{out}/robots_gate", f"{ckpt}/robots"
         )
 
     w4 = None
@@ -1517,12 +1499,8 @@ def cmd_stream_validate(args, spark: SparkSession) -> None:
                 F.when(F.col("warc_ts").isNull(), F.lit("not_null_warc_ts"))
             ],
         )
-        w4 = (
-            tagged.writeStream.format("parquet")
-            .partitionBy(Q.STATUS_COL)
-            .option("path", f"{out}/rows")
-            .option("checkpointLocation", f"{ckpt}/rows")
-            .outputMode("append")
+        w4 = _parquet_sink(
+            tagged, f"{out}/rows", f"{ckpt}/rows", partition_by=Q.STATUS_COL
         )
 
     stage1_extras = [

@@ -54,6 +54,7 @@ Raw-row inputs should be aggregated to windows first (the
 
 from __future__ import annotations
 
+import math
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -551,6 +552,32 @@ def dominant_lag(acf: DataFrame, part_cols: Sequence[str]) -> DataFrame:
     ).select(*part, F.col("_best.lag").alias("lag"), F.col("_best.acf").alias("acf"))
 
 
+def ewma_undefined(mu, sigma) -> bool:
+    """No usable reference frame (σ missing or ≤ 0, μ missing or NaN):
+    the chart emits NULL columns and ``alarm = false``."""
+    return sigma is None or not sigma > 0 or mu is None or mu != mu
+
+
+def ewma_step(lam: float, L: float):
+    """The pinned EWMA recursion, defined once for :func:`ewma_chart`
+    and its streaming twin (``streaming/ewma_stream.py``), so the two
+    are bit-equal by construction: returns ``step(e, f, v, mu, sigma)
+    -> (e, f, ucl, lcl, alarm)`` with ``E_t = λ·v_t + (1−λ)·E_{t−1}``,
+    ``f_t = f_{t−1}·(1−λ)²`` and the constants precomputed here."""
+    q = 1.0 - lam
+    q2 = q * q
+    c = lam / (2.0 - lam)
+
+    def step(e, f, v, mu, sigma):
+        e = lam * v + q * e
+        f = f * q2
+        hw = L * sigma * math.sqrt(c * (1.0 - f))
+        ucl, lcl = mu + hw, mu - hw
+        return e, f, ucl, lcl, e > ucl or e < lcl
+
+    return step
+
+
 def ewma_chart(
     series: DataFrame,
     part_cols: Sequence[str],
@@ -575,17 +602,16 @@ def ewma_chart(
     Determinism: the walk is a SEQUENTIAL left-to-right recursion (a
     geometric-weight sum has no exact closed form over integers), run
     as an explicit Python loop over each BOUNDED series inside one
-    Arrow batch — the float operation sequence (``λ·v + (1−λ)·E``,
-    ``f·(1−λ)²``, ``L·σ·√(c·(1−f))`` with all constants precomputed in
-    Python) is pinned, so a DuckDB recursive-CTE twin replaying the
-    same expressions is bit-identical (the same contract as the
-    streaming twin, which carries (E, f) as O(1) state). Input rows
-    with NULL/NaN values are excluded before the walk.
+    Arrow batch — the float operation sequence (:func:`ewma_step`:
+    ``λ·v + (1−λ)·E``, ``f·(1−λ)²``, ``L·σ·√(c·(1−f))`` with all
+    constants precomputed in Python) is pinned, so a DuckDB
+    recursive-CTE twin replaying the same expressions is bit-identical,
+    and the streaming twin, which carries (E, f) as O(1) state, calls
+    the same step. Input rows with NULL/NaN values are excluded before
+    the walk.
 
     Output: ``(*part_cols, order_col, value, ewma, ucl, lcl, alarm)``.
     """
-    import math
-
     part = list(part_cols)
     if reference is None:
         reference = cusum_reference(series, part_cols, value_col)
@@ -608,9 +634,7 @@ def ewma_chart(
         + ", value double, ewma double, ucl double, lcl double, "
         + "alarm boolean"
     )
-    q = 1.0 - lam
-    q2 = q * q
-    c = lam / (2.0 - lam)
+    step = ewma_step(lam, L)
 
     def walk(pdf):
         import pandas as pd  # noqa: F811
@@ -618,25 +642,16 @@ def ewma_chart(
         pdf = pdf.sort_values(order_col)
         mu = float(pdf["mu"].iloc[0]) if len(pdf) else None
         sigma = float(pdf["sigma"].iloc[0]) if len(pdf) else None
-        degenerate = (
-            sigma is None or not sigma > 0 or mu is None or mu != mu
-        )
         n = len(pdf)
         ewma = [None] * n
         ucl = [None] * n
         lcl = [None] * n
         alarm = [False] * n
-        if not degenerate:
-            e = mu
-            f = 1.0
+        if not ewma_undefined(mu, sigma):
+            e, f = mu, 1.0
             for i, v in enumerate(pdf["value"].tolist()):
-                e = lam * v + q * e
-                f = f * q2
-                hw = L * sigma * math.sqrt(c * (1.0 - f))
+                e, f, ucl[i], lcl[i], alarm[i] = step(e, f, v, mu, sigma)
                 ewma[i] = e
-                ucl[i] = mu + hw
-                lcl[i] = mu - hw
-                alarm[i] = e > ucl[i] or e < lcl[i]
         out = pdf[[*part, order_col, "value"]].copy()
         out["ewma"] = pd.array(ewma, dtype="Float64")
         out["ucl"] = pd.array(ucl, dtype="Float64")

@@ -54,12 +54,19 @@ _UNIT_SECONDS = {
 
 
 def duration_seconds(duration: str) -> int:
-    """Parse ``'1 day'`` / ``'6 hours'`` style tumbling-window durations."""
-    n, unit = duration.strip().split()
-    unit = unit.rstrip("s")
-    if unit not in _UNIT_SECONDS:
-        raise ValueError(f"unsupported window duration: {duration!r}")
-    return int(n) * _UNIT_SECONDS[unit]
+    """The one window-duration grammar (the engine's windows and every
+    stream's ``duration_us``): one or more ``<int> <unit>`` pairs, units
+    case-insensitive with an optional plural ``s`` — ``'1 day'``,
+    ``'2 Days'``, ``'1 day 12 hours'``, the forms Spark's ``F.window``
+    and ``INTERVAL`` accept. An unknown unit (variable-length months
+    included) or a non-positive total raises ``ValueError``."""
+    parts = duration.strip().split()
+    secs = [_UNIT_SECONDS.get(u.lower().rstrip("s")) for u in parts[1::2]]
+    if len(parts) % 2 == 0 and None not in secs:
+        total = sum(int(n) * sec for n, sec in zip(parts[::2], secs))
+        if total > 0:
+            return total
+    raise ValueError(f"unsupported window duration: {duration!r}")
 
 
 def window_start_col(df: DataFrame, ts_col: str, duration: str) -> Column:

@@ -13,15 +13,23 @@ chaining inside one query):
    full window series seen so far, and each new finalized window is
    scored against that history with the reference SR kernel.
 
-Plus :func:`dedup_ingest_stream` (exactly-once url dedup at ingest),
-:func:`js_divergence_stream` (shape drift: per-window lang-distribution
-JS divergence vs the previous window, constant-size reorder-buffer
-state, batch-identical values), and the numeric twin
-:func:`streaming_window_histogram` → :func:`numeric_drift_stream`
-(per-window histogram L∞/TVD/EMD vs the previous window, bit-equal to
-the batch operator), and :func:`cusum_walk_stream` (the sustained-
-level-shift CUSUM walk with a frozen reference — O(1) state per series,
-bit-equal to batch ``series_cusum(..., reference=...)``).
+Plus :func:`dedup_ingest_stream` (exactly-once url dedup at ingest)
+and the stage-2 drift lenses, all on the shared state machines in
+:mod:`~anomalydetector_spark.streaming.pairs`:
+
+* pair streams (one row per contiguous (previous, current) window
+  pair, reorder buffer + emitted ledger): :func:`js_divergence_stream`
+  (lang-distribution JS/TVD), :func:`numeric_drift_stream` and
+  :func:`psi_drift_stream` over :func:`streaming_window_histogram`
+  (L∞/TVD/EMD, PSI/χ²/Cramér's V), :func:`topk_churn_stream` over
+  :func:`streaming_window_topk` (heavy-hitter set churn);
+* ordered walks (consume pointer + reorder buffer, O(1) state per
+  series): :func:`cusum_walk_stream` and :func:`ewma_stream` against a
+  frozen reference frame, :func:`seasonal_expectation_stream`.
+
+Plus :func:`streaming_window_corr` (exact per-window Pearson, one
+built-in windowed aggregation). Every lens is bit- or value-equal to
+its batch operator on the windows it emits.
 """
 
 from anomalydetector_spark.streaming.cusum_stream import (  # noqa: F401

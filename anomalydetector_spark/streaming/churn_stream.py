@@ -14,23 +14,23 @@ Two stages, storage-chained like every stage-2 drift stream here:
    stream's lang bucketing, the candidate list bounds the open
    category set: a category outside it is invisible (document the
    candidates as you would a histogram's bins).
-2. :func:`topk_churn_stream` — the consecutive-window pair machine,
-   string-vector edition: the reorder buffer holds each window's top-k
-   ARRAY, the emitted-window ledger guarantees exactly-once across
-   replays (same contract as ``pairs.window_pairs``, which is
-   double-vector only), and each pair emits the exact integer set
+2. :func:`topk_churn_stream` — the shared consecutive-window pair
+   machine (``pairs.pair_step``: reorder buffer + emitted-window
+   ledger, exactly-once across replays, the same loop every pair
+   stream runs) over a string-set codec: the buffer holds each
+   window's top-k ARRAY (flattened strings + per-window lengths in
+   ``CHURN_STATE_SCHEMA``), and each pair emits the exact integer set
    comparison with ONE final division.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+from itertools import islice
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -40,8 +40,12 @@ from pyspark.sql.types import (
 )
 
 from anomalydetector_spark.streaming.pairs import (
-    EMITTED_RETENTION,
-    duration_us as _duration_us,
+    apply_stateful,
+    duration_us,
+    epoch_us,
+    pair_frame,
+    pair_step,
+    stage1_input,
 )
 
 CHURN_STATE_SCHEMA = StructType(
@@ -77,21 +81,12 @@ def streaming_window_topk(
     window_start, topk array<string>)`` — the deterministic top-k of
     the CONFIGURED candidate categories by count (``n desc, cat asc``;
     zero-count candidates never enter the set)."""
-    part = (
-        F.lit("global")
-        if partition_by is None
-        else F.col(partition_by).cast("string")
-    )
-    src = (
-        stream.withWatermark(ts_col, watermark_delay)
-        if watermark_delay is not None
-        else stream
-    )
     aggs = [
         F.sum((F.col(cat_col) == c).cast("long")).alias(f"_c{i}")
         for i, c in enumerate(candidates)
     ]
-    agg = src.withColumn("partition_key", part).groupBy(
+    src = stage1_input(stream, partition_by, watermark_delay, ts_col)
+    agg = src.groupBy(
         F.window(F.col(ts_col), window_duration).alias("w"),
         "partition_key",
     ).agg(*aggs)
@@ -118,77 +113,41 @@ def streaming_window_topk(
     )
 
 
+def _decode_sets(ts_us, flat, lens):
+    it = iter(flat)
+    return {t: list(islice(it, int(n))) for t, n in zip(ts_us, lens)}
+
+
+def _encode_sets(sets):
+    return [c for s in sets for c in s], [len(s) for s in sets]
+
+
+def _churn(prev, cur):
+    # exact integer set comparison with ONE final division
+    cur_set, prev_set = set(cur), set(prev)
+    kept = len(cur_set & prev_set)
+    new_n = len(cur_set - prev_set)
+    dropped = len(prev_set - cur_set)
+    union = kept + new_n + dropped
+    return (
+        float(kept) / float(union) if union else None,
+        kept, new_n, dropped, kept + new_n, kept + dropped,
+    )
+
+
 def _make_churn_fn(dur_us: int, buffer_windows: int):
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
+    def fn(key, pdfs, state):
         new = pd.concat(list(pdfs), ignore_index=True)
-        buf: dict[int, list] = {}
-        emitted: set[int] = set()
-        if state.exists:
-            _ver, s_ts, s_flat, s_lens, s_em = state.get
-            pos = 0
-            for t, ln in zip(s_ts, s_lens):
-                buf[int(t)] = list(s_flat[pos : pos + int(ln)])
-                pos += int(ln)
-            emitted = {int(t) for t in s_em}
-        ts_us = (
-            new["window_start"].astype("datetime64[us]").astype("int64")
+        items = zip(
+            epoch_us(new["window_start"]).tolist(), map(list, new["topk"])
         )
-        for t, cats in zip(ts_us.tolist(), new["topk"].tolist()):
-            buf.setdefault(int(t), list(cats))
-
-        rows = []
-        for t in sorted(buf):
-            prev = buf.get(t - dur_us)
-            if t in emitted or prev is None:
-                continue
-            cur_set, prev_set = set(buf[t]), set(prev)
-            kept = len(cur_set & prev_set)
-            new_n = len(cur_set - prev_set)
-            dropped = len(prev_set - cur_set)
-            union = kept + new_n + dropped
-            rows.append(
-                (
-                    t,
-                    float(kept) / float(union) if union else None,
-                    kept, new_n, dropped,
-                    kept + new_n, kept + dropped,
-                )
-            )
-            emitted.add(t)
-
-        kept_ts = sorted(buf)[-buffer_windows:]
-        ledger = sorted(emitted)[-EMITTED_RETENTION:]
-        state.update(
-            (
-                STATE_VERSION,
-                [int(t) for t in kept_ts],
-                [c for t in kept_ts for c in buf[t]],
-                [len(buf[t]) for t in kept_ts],
-                [int(t) for t in ledger],
-            )
+        pairs = pair_step(
+            state, items, dur_us, buffer_windows, STATE_VERSION,
+            _decode_sets, _encode_sets,
         )
-        if not rows:
+        if not pairs:
             return iter(())
-        out = pd.DataFrame(
-            rows,
-            columns=[
-                "_ts", "jaccard", "n_kept", "n_new", "n_dropped",
-                "k_cur", "k_prev",
-            ],
-        )
-        out.insert(0, "partition_key", key[0])
-        out["window_start"] = pd.to_datetime(out.pop("_ts"), unit="us")
-        out = out[
-            [
-                "partition_key", "window_start", "jaccard", "n_kept",
-                "n_new", "n_dropped", "k_cur", "k_prev",
-            ]
-        ]
-        return iter((out,))
+        return iter((pair_frame(key, pairs, _churn, CHURN_SCHEMA),))
 
     return fn
 
@@ -203,11 +162,7 @@ def topk_churn_stream(
     emitted-window ledger; a window whose predecessor never arrives
     inside the buffer horizon is skipped — the batch operator's
     omit-after-gap semantics."""
-    dur = _duration_us(window_duration)
-    return topk_stream.groupBy("partition_key").applyInPandasWithState(
-        _make_churn_fn(dur, buffer_windows),
-        outputStructType=CHURN_SCHEMA,
-        stateStructType=CHURN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    fn = _make_churn_fn(duration_us(window_duration), buffer_windows)
+    return apply_stateful(
+        topk_stream, ["partition_key"], fn, CHURN_SCHEMA, CHURN_STATE_SCHEMA
     )

@@ -26,55 +26,43 @@ changepoint estimate — NULL until the walk first dips below zero,
 matching the batch argmin-encoding convention bit for bit).
 
 Ordering: CUSUM is ORDER-SENSITIVE, so unlike the pair machine this
-stream cannot skip a window and go on — it maintains a small reorder
-buffer and CONSUMES the oldest buffered window only when it is
-contiguous with the last consumed one (the fast path) or when
-``buffer_windows`` newer windows have accumulated behind it (the
-near-sorted horizon has passed — any still-missing older window is
-declared lost and will be DROPPED on late arrival, the same
-drop-beyond-horizon rule as the incremental SR scorer). Replayed
-windows at or before the consume pointer are dropped by the pointer
-itself — exactly-once without a ledger.
+stream cannot skip a window and go on. The shared ordered-walk machine
+(``pairs.ordered_walk_fn``) keeps a small reorder buffer and CONSUMES
+the oldest buffered window only when it is contiguous with the last
+consumed one (the fast path) or when ``buffer_windows`` newer windows
+have accumulated behind it (the near-sorted horizon has passed — any
+still-missing older window is declared lost and will be DROPPED on late
+arrival, the same drop-beyond-horizon rule as the incremental SR
+scorer). Replayed windows at or before the consume pointer are dropped
+by the pointer itself — exactly-once without a ledger. This module
+contributes only the walk step.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StructField
 
 from anomalydetector_spark.streaming.pairs import (
-    ORDERED_NONE as _NONE,
-    duration_us as _duration_us,
-    ordered_drain,
+    ORDERED_NONE,
+    SERIES_KEY,
+    apply_stateful,
+    collect_reference,
+    duration_us,
+    half_up_micro,
+    ordered_walk_fn,
+    walk_state_schema,
 )
 
-CUSUM_STATE_SCHEMA = StructType(
-    [
-        StructField("version", LongType()),
-        StructField("last_ts_us", LongType()),
-        StructField("cp_q", LongType()),
-        StructField("cn_q", LongType()),
-        StructField("minp_q", LongType()),
-        StructField("minn_q", LongType()),
-        StructField("anchor_pos_us", LongType()),
-        StructField("anchor_neg_us", LongType()),
-        StructField("buf_ts_us", ArrayType(LongType())),
-        StructField("buf_vals", ArrayType(DoubleType())),
-    ]
+CUSUM_STATE_SCHEMA = walk_state_schema(
+    *(
+        StructField(name, LongType())
+        for name in (
+            "cp_q", "cn_q", "minp_q", "minn_q",
+            "anchor_pos_us", "anchor_neg_us",
+        )
+    )
 )
-
-STATE_VERSION = 1
 
 CUSUM_SCHEMA = (
     "partition_key string, stat_name string, window_start timestamp, "
@@ -84,15 +72,6 @@ CUSUM_SCHEMA = (
 )
 
 
-
-def _half_up_micro(x: float) -> int:
-    """Spark ``round(double, 0)`` semantics (shortest repr → BigDecimal
-    HALF_UP) — required for bit-parity with the batch ``F.round``."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return int(Decimal(repr(x)).quantize(0, rounding=ROUND_HALF_UP))
-
-
 def _make_walk_fn(
     refs: dict, k: float, h: float, dur_us: int, buffer_windows: int,
     trust_first: bool = False,
@@ -100,111 +79,36 @@ def _make_walk_fn(
     kq = round(k * 1e6)
     hq = round(h * 1e6)
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        new = pd.concat(list(pdfs), ignore_index=True)
-        ref = refs.get(tuple(key))
-        mu, sigma = (ref if ref else (None, None))
-        degenerate = sigma is None or not sigma > 0
+    def step(key, walk, t0, v):
+        mu, sigma = refs.get(key) or (None, None)
+        if sigma is None or not sigma > 0:
+            return walk, (None, None, None, False, False, False, None, None)
+        cp_q, cn_q, minp_q, minn_q, anch_p, anch_n = walk
+        z = (v - mu) / sigma
+        zq = half_up_micro(z * 1e6)
+        cp_q += zq - kq
+        cn_q += -zq - kq
+        # strict-min argmin == the batch's encoded min (earliest
+        # index at the minimum: a tie keeps the earlier anchor)
+        if cp_q < minp_q:
+            minp_q, anch_p = cp_q, t0
+        if cn_q < minn_q:
+            minn_q, anch_n = cn_q, t0
+        s_pos = float(cp_q - min(0, minp_q)) / 1e6
+        s_neg = float(cn_q - min(0, minn_q)) / 1e6
+        a_p = s_pos > hq / 1e6
+        a_n = s_neg > hq / 1e6
+        return (cp_q, cn_q, minp_q, minn_q, anch_p, anch_n), (
+            z, s_pos, s_neg, a_p, a_n, a_p or a_n,
+            anch_p if minp_q < 0 else None,
+            anch_n if minn_q < 0 else None,
+        )
 
-        if state.exists:
-            (
-                _ver, last_ts, cp_q, cn_q, minp_q, minn_q,
-                anch_p, anch_n, buf_ts, buf_vals,
-            ) = state.get
-            buf = dict(zip((int(t) for t in buf_ts), buf_vals))
-        else:
-            last_ts, cp_q, cn_q = _NONE, 0, 0
-            minp_q = minn_q = 0
-            anch_p = anch_n = _NONE
-            buf = {}
-
-        ts_us = (
-            new["window_start"].astype("datetime64[us]").astype("int64")
-        )
-        for t, v in zip(ts_us.tolist(), new["value"].tolist()):
-            # pointer IS the ledger: consumed windows never re-enter;
-            # NULL/NaN values are excluded like the batch filter
-            if last_ts != _NONE and t <= last_ts:
-                continue
-            if v is None or v != v:
-                continue
-            buf.setdefault(int(t), float(v))
-
-        out_rows = []
-        consumed, last_ts = ordered_drain(
-            buf, last_ts, dur_us, buffer_windows, trust_first
-        )
-        for t0, v in consumed:
-            if degenerate:
-                out_rows.append(
-                    (t0, v, None, None, None, False, False, False,
-                     None, None)
-                )
-                continue
-            z = (v - mu) / sigma
-            zq = _half_up_micro(z * 1e6)
-            cp_q += zq - kq
-            cn_q += -zq - kq
-            # strict-min argmin == the batch's encoded min (earliest
-            # index at the minimum: a tie keeps the earlier anchor)
-            if cp_q < minp_q:
-                minp_q, anch_p = cp_q, t0
-            if cn_q < minn_q:
-                minn_q, anch_n = cn_q, t0
-            s_pos = float(cp_q - min(0, minp_q)) / 1e6
-            s_neg = float(cn_q - min(0, minn_q)) / 1e6
-            a_p = s_pos > hq / 1e6
-            a_n = s_neg > hq / 1e6
-            out_rows.append(
-                (
-                    t0, v, z, s_pos, s_neg, a_p, a_n, a_p or a_n,
-                    anch_p if minp_q < 0 else None,
-                    anch_n if minn_q < 0 else None,
-                )
-            )
-
-        kept = sorted(buf)
-        state.update(
-            (
-                STATE_VERSION,
-                int(last_ts), int(cp_q), int(cn_q),
-                int(minp_q), int(minn_q), int(anch_p), int(anch_n),
-                [int(t) for t in kept],
-                [float(buf[t]) for t in kept],
-            )
-        )
-        if not out_rows:
-            return iter(())
-        out = pd.DataFrame(
-            out_rows,
-            columns=[
-                "_ts", "value", "z", "s_pos", "s_neg",
-                "alarm_pos", "alarm_neg", "alarm", "_cp_p", "_cp_n",
-            ],
-        )
-        out.insert(0, "partition_key", key[0])
-        out.insert(1, "stat_name", key[1])
-        out["window_start"] = pd.to_datetime(out.pop("_ts"), unit="us")
-        out["cp_pos"] = pd.to_datetime(
-            out.pop("_cp_p"), unit="us", errors="coerce"
-        )
-        out["cp_neg"] = pd.to_datetime(
-            out.pop("_cp_n"), unit="us", errors="coerce"
-        )
-        out = out[
-            [
-                "partition_key", "stat_name", "window_start", "value",
-                "z", "s_pos", "s_neg", "alarm_pos", "alarm_neg",
-                "alarm", "cp_pos", "cp_neg",
-            ]
-        ]
-        return iter((out,))
-
-    return fn
+    return ordered_walk_fn(
+        CUSUM_SCHEMA,
+        lambda key: (0, 0, 0, 0, ORDERED_NONE, ORDERED_NONE),
+        step, dur_us, buffer_windows, trust_first,
+    )
 
 
 def cusum_walk_stream(
@@ -240,19 +144,10 @@ def cusum_walk_stream(
     seen anchors the walk immediately (an even-earlier window arriving
     later is then dropped).
     """
-    ref_rows = reference.select(
-        "partition_key", "stat_name", "mu", "sigma"
-    ).collect()
-    refs = {
-        (r.partition_key, r.stat_name): (r.mu, r.sigma) for r in ref_rows
-    }
-    dur = _duration_us(window_duration)
-    return stat_series_stream.groupBy(
-        "partition_key", "stat_name"
-    ).applyInPandasWithState(
-        _make_walk_fn(refs, k, h, dur, buffer_windows, trust_first),
-        outputStructType=CUSUM_SCHEMA,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    fn = _make_walk_fn(
+        collect_reference(reference), k, h,
+        duration_us(window_duration), buffer_windows, trust_first,
+    )
+    return apply_stateful(
+        stat_series_stream, SERIES_KEY, fn, CUSUM_SCHEMA, CUSUM_STATE_SCHEMA
     )

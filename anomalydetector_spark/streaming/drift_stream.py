@@ -31,7 +31,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -42,6 +42,12 @@ from pyspark.sql.types import (
 
 from anomalydetector_spark.kernel.sr import MIN_POINTS, SrParams, sr_detect
 from anomalydetector_spark.plans.fused import DEFAULT_LANGS
+from anomalydetector_spark.streaming.pairs import (
+    SERIES_KEY,
+    apply_stateful,
+    epoch_us,
+    stage1_input,
+)
 
 
 # state: the retained series, as epoch-micros + values, plus the global
@@ -88,11 +94,6 @@ def streaming_window_stats(
     (e.g. :func:`~anomalydetector_spark.streaming.dedup_ingest_stream`;
     Spark disallows redefining the watermark inside one query).
     """
-    part = (
-        F.lit("global")
-        if partition_by is None
-        else F.col(partition_by).cast("string")
-    )
     aggs = [
         F.count(F.lit(1)).cast("double").alias("doc_count"),
         F.avg(F.col("text").isNull().cast("double")).alias("null_rate"),
@@ -104,12 +105,7 @@ def streaming_window_stats(
             F.avg((F.col("lang") == lang).cast("double")).alias(f"lang_frac_{lang}")
         )
     wide = (
-        (
-            pages_stream.withWatermark(ts_col, watermark_delay)
-            if watermark_delay is not None
-            else pages_stream
-        )
-        .withColumn("partition_key", part)
+        stage1_input(pages_stream, partition_by, watermark_delay, ts_col)
         .groupBy(F.window(F.col(ts_col), window_duration).alias("w"), "partition_key")
         .agg(*aggs)
         .withColumn("window_start", F.col("w.start"))
@@ -139,9 +135,7 @@ def _make_scorer(params: SrParams):
     ) -> Iterator[pd.DataFrame]:
         new = pd.concat(list(pdfs), ignore_index=True)
         new = new.sort_values("window_start")
-        new_us = (
-            new["window_start"].astype("datetime64[us]").astype("int64").tolist()
-        )
+        new_us = epoch_us(new["window_start"]).tolist()
         new_vals = new["value"].astype(float).tolist()
 
         if state.exists:
@@ -254,10 +248,7 @@ def sr_score_stream(
     No timeout: a stat series lives as long as the table does.
     """
     p = params or SrParams()
-    return stat_series_stream.groupBy("partition_key", "stat_name").applyInPandasWithState(
-        _make_scorer(p),
-        outputStructType=SCORED_SCHEMA,
-        stateStructType=STAT_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return apply_stateful(
+        stat_series_stream, SERIES_KEY, _make_scorer(p), SCORED_SCHEMA,
+        STAT_STATE_SCHEMA,
     )

@@ -5,52 +5,35 @@ trend.ewma_chart` on every emitted window.
 The EWMA recursion ``E_t = λ·v_t + (1−λ)·E_{t−1}`` is already the
 online form (unlike CUSUM no closed form is even needed): state per
 series is just ``(E, f)`` where ``f = (1−λ)^{2t}`` drives the
-time-varying control-limit width — O(1) forever. The float operation
-sequence is IDENTICAL to the batch walk's Python loop (same
-expressions, same constant pre-computation), so emitted rows are
+time-varying control-limit width — O(1) forever. The recursion is
+ONE function, :func:`~anomalydetector_spark.operators.trend.ewma_step`,
+called by the batch walk and by this stream, so emitted rows are
 bit-equal by construction.
 
-Ordering/exactly-once: the shared :func:`~anomalydetector_spark.
-streaming.pairs.ordered_drain` consume rule (contiguous fast path,
-else after ``buffer_windows`` newer windows — CUSUM's machinery), with
-the consume pointer as the ledger.
+Ordering/exactly-once: the shared ordered-walk machine
+(:func:`~anomalydetector_spark.streaming.pairs.ordered_walk_fn` —
+contiguous fast path, else after ``buffer_windows`` newer windows),
+with the consume pointer as the ledger.
 """
 
 from __future__ import annotations
 
-import math
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import DoubleType, StructField
 
+from anomalydetector_spark.operators.trend import ewma_step, ewma_undefined
 from anomalydetector_spark.streaming.pairs import (
-    ORDERED_NONE as _NONE,
-    duration_us as _duration_us,
-    ordered_drain,
+    SERIES_KEY,
+    apply_stateful,
+    collect_reference,
+    duration_us,
+    ordered_walk_fn,
+    walk_state_schema,
 )
 
-EWMA_STATE_SCHEMA = StructType(
-    [
-        StructField("version", LongType()),
-        StructField("last_ts_us", LongType()),
-        StructField("e", DoubleType()),
-        StructField("f", DoubleType()),
-        StructField("buf_ts_us", ArrayType(LongType())),
-        StructField("buf_vals", ArrayType(DoubleType())),
-    ]
+EWMA_STATE_SCHEMA = walk_state_schema(
+    StructField("e", DoubleType()), StructField("f", DoubleType())
 )
-
-STATE_VERSION = 1
 
 EWMA_SCHEMA = (
     "partition_key string, stat_name string, window_start timestamp, "
@@ -62,87 +45,23 @@ def _make_ewma_fn(
     refs: dict, lam: float, L: float, dur_us: int, buffer_windows: int,
     trust_first: bool = False,
 ):
-    q = 1.0 - lam
-    q2 = q * q
-    c = lam / (2.0 - lam)
+    ewma = ewma_step(lam, L)
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        new = pd.concat(list(pdfs), ignore_index=True)
-        ref = refs.get(tuple(key))
-        mu, sigma = (ref if ref else (None, None))
-        degenerate = (
-            sigma is None or not sigma > 0 or mu is None or mu != mu
-        )
+    def init(key):
+        mu, sigma = refs.get(key) or (None, None)
+        return (0.0 if ewma_undefined(mu, sigma) else mu, 1.0)
 
-        if state.exists:
-            _ver, last_ts, e, f, buf_ts, buf_vals = state.get
-            buf = dict(zip((int(t) for t in buf_ts), buf_vals))
-        else:
-            last_ts = _NONE
-            e = mu if not degenerate else 0.0
-            f = 1.0
-            buf = {}
+    def step(key, walk, t0, v):
+        mu, sigma = refs.get(key) or (None, None)
+        if ewma_undefined(mu, sigma):
+            return walk, (None, None, None, False)
+        e, f, ucl, lcl, alarm = ewma(*walk, v, mu, sigma)
+        return (e, f), (e, ucl, lcl, alarm)
 
-        ts_us = (
-            new["window_start"].astype("datetime64[us]").astype("int64")
-        )
-        for t, v in zip(ts_us.tolist(), new["value"].tolist()):
-            if last_ts != _NONE and t <= last_ts:
-                continue
-            if v is None or v != v:
-                continue
-            buf.setdefault(int(t), float(v))
-
-        out_rows = []
-        consumed, last_ts = ordered_drain(
-            buf, last_ts, dur_us, buffer_windows, trust_first
-        )
-        for t0, v in consumed:
-            if degenerate:
-                out_rows.append((t0, v, None, None, None, False))
-                continue
-            e = lam * v + q * e
-            f = f * q2
-            hw = L * sigma * math.sqrt(c * (1.0 - f))
-            ucl = mu + hw
-            lcl = mu - hw
-            out_rows.append(
-                (t0, v, e, ucl, lcl, e > ucl or e < lcl)
-            )
-
-        kept = sorted(buf)
-        state.update(
-            (
-                STATE_VERSION,
-                int(last_ts), float(e), float(f),
-                [int(t) for t in kept],
-                [float(buf[t]) for t in kept],
-            )
-        )
-        if not out_rows:
-            return iter(())
-        out = pd.DataFrame(
-            out_rows,
-            columns=["_ts", "value", "ewma", "ucl", "lcl", "alarm"],
-        )
-        out.insert(0, "partition_key", key[0])
-        out.insert(1, "stat_name", key[1])
-        out["window_start"] = pd.to_datetime(out.pop("_ts"), unit="us")
-        for col in ("ewma", "ucl", "lcl"):
-            out[col] = pd.array(out[col].tolist(), dtype="Float64")
-        out = out[
-            [
-                "partition_key", "stat_name", "window_start", "value",
-                "ewma", "ucl", "lcl", "alarm",
-            ]
-        ]
-        return iter((out,))
-
-    return fn
+    return ordered_walk_fn(
+        EWMA_SCHEMA, init, step, dur_us, buffer_windows, trust_first,
+        dict.fromkeys(("ewma", "ucl", "lcl"), "Float64"),
+    )
 
 
 def ewma_stream(
@@ -167,19 +86,10 @@ def ewma_stream(
     total windows never emit, first emission lags ~9 window durations.
     ``trust_first=True`` anchors on the first window seen (in-order
     sources only; see ``ordered_drain``)."""
-    ref_rows = reference.select(
-        "partition_key", "stat_name", "mu", "sigma"
-    ).collect()
-    refs = {
-        (r.partition_key, r.stat_name): (r.mu, r.sigma) for r in ref_rows
-    }
-    dur = _duration_us(window_duration)
-    return stat_series_stream.groupBy(
-        "partition_key", "stat_name"
-    ).applyInPandasWithState(
-        _make_ewma_fn(refs, lam, L, dur, buffer_windows, trust_first),
-        outputStructType=EWMA_SCHEMA,
-        stateStructType=EWMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    fn = _make_ewma_fn(
+        collect_reference(reference), lam, L,
+        duration_us(window_duration), buffer_windows, trust_first,
+    )
+    return apply_stateful(
+        stat_series_stream, SERIES_KEY, fn, EWMA_SCHEMA, EWMA_STATE_SCHEMA
     )

@@ -31,19 +31,23 @@ as phantom drift); out-of-range values clamp into the edge bins.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+import itertools
+import math
 
-import pandas as pd
+import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from anomalydetector_spark.operators.divergence import numeric_bin
 from anomalydetector_spark.streaming.pairs import (
     PAIR_STATE_SCHEMA,
-    duration_us as _duration_us,
-    window_pairs,
+    apply_stateful,
+    duration_us,
+    epoch_us,
+    half_up_micro,
+    stage1_input,
+    vector_pair_fn,
 )
 
 HIST_SCHEMA = (
@@ -77,20 +81,10 @@ def streaming_window_histogram(
     when chaining after another stateful stage that already set it
     (Spark disallows redefining the watermark inside one query).
     """
-    part = (
-        F.lit("global")
-        if partition_by is None
-        else F.col(partition_by).cast("string")
-    )
     v = F.col(value_col)
-    src = (
-        stream.withWatermark(ts_col, watermark_delay)
-        if watermark_delay is not None
-        else stream
-    )
     binned = (
-        src.filter(v.isNotNull() & ~F.isnan(v))
-        .withColumn("partition_key", part)
+        stage1_input(stream, partition_by, watermark_delay, ts_col)
+        .filter(v.isNotNull() & ~F.isnan(v))
         .withColumn("_bin", numeric_bin(v, lo, hi, n_bins))
     )
     aggs = [
@@ -113,77 +107,49 @@ def streaming_window_histogram(
     )
 
 
-def _make_drift_fn(n_bins: int, dur_us: int, buffer_windows: int):
-    import numpy as np
+def _hist_vectors(n_bins: int):
+    """The histogram micro-batch decode shared by the drift and PSI
+    streams: ``(ts_us, counts)`` in window order, or None when empty."""
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        out = []
-        if not pdf.empty:
-            pdf = pdf.sort_values("window_start")
-            # counts ride the shared float64 state buffer — exact up to
-            # 2^53 per (window, bin), far past any real micro-batch
-            vecs = np.stack(
-                [
-                    np.asarray(b, dtype="float64")
-                    for b in pdf["bin_counts"]
-                ]
+    def vectors(key, pdf):
+        if pdf.empty:
+            return None
+        pdf = pdf.sort_values("window_start")
+        # counts ride the shared float64 state buffer — exact up to
+        # 2^53 per (window, bin), far past any real micro-batch
+        vecs = np.stack(
+            [np.asarray(b, dtype="float64") for b in pdf["bin_counts"]]
+        )
+        if vecs.shape[1] != n_bins:
+            raise ValueError(
+                f"bin_counts width {vecs.shape[1]} != n_bins {n_bins}"
             )
-            if vecs.shape[1] != n_bins:
-                raise ValueError(
-                    f"bin_counts width {vecs.shape[1]} != n_bins {n_bins}"
-                )
-            ts_us = (
-                pdf["window_start"]
-                .astype("datetime64[us]")
-                .astype("int64")
-                .to_numpy()
-            )
-            for t, prev, cur in window_pairs(
-                state, ts_us, vecs, n_bins, dur_us, buffer_windows
-            ):
-                # exact integer arithmetic, mirroring the batch
-                # decimal(38,0) pipeline term for term
-                c = [int(x) for x in cur]
-                d = [int(x) for x in prev]
-                tc, td = sum(c), sum(d)
-                x = [ci * td - di * tc for ci, di in zip(c, d)]
-                den = float(tc * td)
-                acc, emd_sum = 0, 0
-                for v in x:
-                    acc += v
-                    emd_sum += abs(acc)
-                out.append(
-                    (
-                        key[0],
-                        pd.Timestamp(t, unit="us"),
-                        float(max(abs(v) for v in x)) / den,
-                        float(sum(abs(v) for v in x)) / den / 2.0,
-                        float(emd_sum) / den,
-                        sum(
-                            1
-                            for ci, di in zip(c, d)
-                            if ci > 0 or di > 0
-                        ),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "partition_key",
-                "window_start",
-                "linf",
-                "tvd",
-                "emd",
-                "n_bins_hit",
-            ],
+        return epoch_us(pdf["window_start"]), vecs
+
+    return vectors
+
+
+def _make_drift_fn(n_bins: int, dur_us: int, buffer_windows: int):
+    def score(prev, cur):
+        # exact integer arithmetic, mirroring the batch decimal(38,0)
+        # pipeline term for term
+        c = [int(x) for x in cur]
+        d = [int(x) for x in prev]
+        tc, td = sum(c), sum(d)
+        x = [ci * td - di * tc for ci, di in zip(c, d)]
+        den = float(tc * td)
+        emd_sum = sum(abs(acc) for acc in itertools.accumulate(x))
+        return (
+            float(max(abs(v) for v in x)) / den,
+            float(sum(abs(v) for v in x)) / den / 2.0,
+            float(emd_sum) / den,
+            sum(1 for ci, di in zip(c, d) if ci > 0 or di > 0),
         )
 
-    return fn
+    return vector_pair_fn(
+        NUMERIC_DRIFT_SCHEMA, _hist_vectors(n_bins), score, n_bins, dur_us,
+        buffer_windows,
+    )
 
 
 def numeric_drift_stream(
@@ -197,14 +163,10 @@ def numeric_drift_stream(
     contiguous (previous, current) window pair per partition, emitted
     exactly once when both windows have arrived, values bit-equal to the
     batch ``numeric_window_drift`` on the same rows."""
-    return hist_stream.groupBy("partition_key").applyInPandasWithState(
-        _make_drift_fn(
-            n_bins, _duration_us(window_duration), buffer_windows
-        ),
-        outputStructType=NUMERIC_DRIFT_SCHEMA,
-        stateStructType=PAIR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    fn = _make_drift_fn(n_bins, duration_us(window_duration), buffer_windows)
+    return apply_stateful(
+        hist_stream, ["partition_key"], fn, NUMERIC_DRIFT_SCHEMA,
+        PAIR_STATE_SCHEMA,
     )
 
 
@@ -214,103 +176,41 @@ PSI_DRIFT_SCHEMA = (
 )
 
 
-def _half_up_micro(x: float) -> int:
-    """Spark ``round(double, 0)`` semantics: shortest decimal repr →
-    BigDecimal HALF_UP — required for bit-parity with the batch
-    ``psi_chi2_from_bin_counts`` (Python's ``round`` is banker's and
-    disagrees on exact .5 reprs)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return int(Decimal(repr(x)).quantize(0, rounding=ROUND_HALF_UP))
-
-
 def _make_psi_fn(n_bins: int, dur_us: int, buffer_windows: int, alpha: int):
-    import math
-
-    import numpy as np
-
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        out = []
-        if not pdf.empty:
-            pdf = pdf.sort_values("window_start")
-            vecs = np.stack(
-                [
-                    np.asarray(b, dtype="float64")
-                    for b in pdf["bin_counts"]
-                ]
+    def score(prev, cur):
+        # batch-mirror arithmetic (psi_chi2_from_bin_counts): add-alpha
+        # smoothing over the pair's UNION support, micro-quantized
+        # transcendentals, exact integer sums
+        c0 = [int(x) for x in cur]
+        d0 = [int(x) for x in prev]
+        union = [i for i in range(n_bins) if c0[i] > 0 or d0[i] > 0]
+        b = len(union)
+        tc = sum(c0) + alpha * b
+        td = sum(d0) + alpha * b
+        psi_num, chi_sum = 0, 0
+        for i in union:
+            c, d = c0[i] + alpha, d0[i] + alpha
+            num = c * td - d * tc
+            lnm = half_up_micro(
+                math.log((float(c) * float(td)) / (float(d) * float(tc)))
+                * 1e6
             )
-            if vecs.shape[1] != n_bins:
-                raise ValueError(
-                    f"bin_counts width {vecs.shape[1]} != n_bins {n_bins}"
-                )
-            ts_us = (
-                pdf["window_start"]
-                .astype("datetime64[us]")
-                .astype("int64")
-                .to_numpy()
+            chim = half_up_micro(
+                float(num) * float(num) / float(tc * td * (c + d)) * 1e6
             )
-            for t, prev, cur in window_pairs(
-                state, ts_us, vecs, n_bins, dur_us, buffer_windows
-            ):
-                # batch-mirror arithmetic (psi_chi2_from_bin_counts):
-                # add-alpha smoothing over the pair's UNION support,
-                # micro-quantized transcendentals, exact integer sums
-                c0 = [int(x) for x in cur]
-                d0 = [int(x) for x in prev]
-                union = [
-                    i for i in range(n_bins) if c0[i] > 0 or d0[i] > 0
-                ]
-                b = len(union)
-                tc = sum(c0) + alpha * b
-                td = sum(d0) + alpha * b
-                psi_num, chi_sum = 0, 0
-                for i in union:
-                    c, d = c0[i] + alpha, d0[i] + alpha
-                    num = c * td - d * tc
-                    lnm = _half_up_micro(
-                        math.log(
-                            (float(c) * float(td))
-                            / (float(d) * float(tc))
-                        )
-                        * 1e6
-                    )
-                    chim = _half_up_micro(
-                        float(num) * float(num)
-                        / float(tc * td * (c + d))
-                        * 1e6
-                    )
-                    psi_num += num * lnm
-                    chi_sum += chim
-                out.append(
-                    (
-                        key[0],
-                        pd.Timestamp(t, unit="us"),
-                        float(psi_num) / float(tc * td) / 1e6,
-                        float(chi_sum) / 1e6,
-                        math.sqrt(
-                            float(chi_sum) / 1e6 / float(tc + td)
-                        ),
-                        b,
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "partition_key",
-                "window_start",
-                "psi",
-                "chi2",
-                "cramers_v",
-                "n_bins_union",
-            ],
+            psi_num += num * lnm
+            chi_sum += chim
+        return (
+            float(psi_num) / float(tc * td) / 1e6,
+            float(chi_sum) / 1e6,
+            math.sqrt(float(chi_sum) / 1e6 / float(tc + td)),
+            b,
         )
 
-    return fn
+    return vector_pair_fn(
+        PSI_DRIFT_SCHEMA, _hist_vectors(n_bins), score, n_bins, dur_us,
+        buffer_windows,
+    )
 
 
 def psi_drift_stream(
@@ -331,14 +231,12 @@ def psi_drift_stream(
     exact integer sums with one final double division chain."""
     if alpha < 0:
         raise ValueError("alpha must be a non-negative integer")
-    return hist_stream.groupBy("partition_key").applyInPandasWithState(
-        _make_psi_fn(
-            n_bins, _duration_us(window_duration), buffer_windows, alpha
-        ),
-        outputStructType=PSI_DRIFT_SCHEMA,
-        stateStructType=PAIR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    fn = _make_psi_fn(
+        n_bins, duration_us(window_duration), buffer_windows, alpha
+    )
+    return apply_stateful(
+        hist_stream, ["partition_key"], fn, PSI_DRIFT_SCHEMA,
+        PAIR_STATE_SCHEMA,
     )
 
 
@@ -369,20 +267,11 @@ def streaming_window_corr(
     ``watermark_delay=None`` skips ``withWatermark`` (for chaining
     after a stage that already set it)."""
     dec = "decimal(38,0)"
-    part = (
-        F.lit("global")
-        if partition_by is None
-        else F.col(partition_by).cast("string")
-    )
-    src = (
-        stream.withWatermark(ts_col, watermark_delay)
-        if watermark_delay is not None
-        else stream
-    )
 
     def _micro(c):
         return F.round(F.col(c).cast("double") * F.lit(1e6), 0).cast(dec)
 
+    src = stage1_input(stream, partition_by, watermark_delay, ts_col)
     rows = src.filter(
         F.col(col_a).isNotNull()
         & F.col(col_b).isNotNull()
@@ -390,7 +279,7 @@ def streaming_window_corr(
         & ~F.isnan(F.col(col_b).cast("double"))
     ).select(
         F.col(ts_col),
-        part.alias("partition_key"),
+        "partition_key",
         _micro(col_a).alias("_aq"),
         _micro(col_b).alias("_bq"),
     )

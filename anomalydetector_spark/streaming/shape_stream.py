@@ -20,18 +20,17 @@ identical values (pinned by test).
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
+import numpy as np
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from anomalydetector_spark.plans.fused import DEFAULT_LANGS
 from anomalydetector_spark.streaming.pairs import (
     PAIR_STATE_SCHEMA,
+    apply_stateful,
     duration_us as _duration_us,
-    window_pairs,
+    epoch_us,
+    vector_pair_fn,
 )
 
 
@@ -48,68 +47,46 @@ DIV_SCHEMA = (
 def _make_div_fn(
     langs: tuple[str, ...], dur_us: int, buffer_windows: int
 ):
-    import numpy as np
-
     frac_cols = [f"lang_frac_{l}" for l in langs]
-    n_cats = len(langs) + 1
 
-    def fn(
-        key: tuple,
-        pdfs: Iterable[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(pdfs), ignore_index=True)
+    def vectors(key, pdf):
         pdf = pdf[pdf["stat_name"].isin(frac_cols)]
-        out = []
-        if not pdf.empty:
-            wide = (
-                pdf.pivot_table(
-                    index="window_start",
-                    columns="stat_name",
-                    values="value",
-                    aggfunc="last",
-                )
-                .reindex(columns=frac_cols)
-                .sort_index()
+        if pdf.empty:
+            return None
+        wide = (
+            pdf.pivot_table(
+                index="window_start",
+                columns="stat_name",
+                values="value",
+                aggfunc="last",
             )
-            # stage 1 unpivots one wide row per window, so a window's
-            # fracs always land in one micro-batch — a missing column
-            # would mean corrupt input; fail loud rather than renormalize
-            if wide.isna().any().any():
-                raise ValueError(
-                    f"incomplete lang_frac window rows for key {key}"
-                )
-            probs = wide.to_numpy(dtype="float64")
-            other = np.clip(1.0 - probs.sum(axis=1), 0.0, None)
-            probs = np.column_stack([probs, other])
-            ts_us = (
-                wide.index.astype("datetime64[us]").astype("int64").to_numpy()
-            )
-
-            for t, q, p in window_pairs(
-                state, ts_us, probs, n_cats, dur_us, buffer_windows
-            ):
-                m = (p + q) / 2.0
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    js = 0.5 * np.where(
-                        p > 0, p * np.log2(np.divide(p, m, where=m > 0)), 0.0
-                    ).sum() + 0.5 * np.where(
-                        q > 0, q * np.log2(np.divide(q, m, where=m > 0)), 0.0
-                    ).sum()
-                out.append(
-                    (
-                        key[0],
-                        pd.Timestamp(t, unit="us"),
-                        float(js),
-                        float(np.abs(p - q).sum() / 2.0),
-                    )
-                )
-        yield pd.DataFrame(
-            out,
-            columns=["partition_key", "window_start", "js_divergence", "tvd"],
+            .reindex(columns=frac_cols)
+            .sort_index()
         )
+        # stage 1 unpivots one wide row per window, so a window's
+        # fracs always land in one micro-batch — a missing column
+        # would mean corrupt input; fail loud rather than renormalize
+        if wide.isna().any().any():
+            raise ValueError(
+                f"incomplete lang_frac window rows for key {key}"
+            )
+        probs = wide.to_numpy(dtype="float64")
+        other = np.clip(1.0 - probs.sum(axis=1), 0.0, None)
+        return epoch_us(wide.index), np.column_stack([probs, other])
 
-    return fn
+    def score(q, p):
+        m = (p + q) / 2.0
+        with np.errstate(divide="ignore", invalid="ignore"):
+            js = 0.5 * np.where(
+                p > 0, p * np.log2(np.divide(p, m, where=m > 0)), 0.0
+            ).sum() + 0.5 * np.where(
+                q > 0, q * np.log2(np.divide(q, m, where=m > 0)), 0.0
+            ).sum()
+        return float(js), float(np.abs(p - q).sum() / 2.0)
+
+    return vector_pair_fn(
+        DIV_SCHEMA, vectors, score, len(langs) + 1, dur_us, buffer_windows
+    )
 
 
 def js_divergence_stream(
@@ -122,12 +99,10 @@ def js_divergence_stream(
     long-format output of :func:`streaming_window_stats`): one row per
     contiguous (previous, current) window pair per partition, emitted
     exactly once when both windows have arrived."""
-    return stat_series_stream.groupBy("partition_key").applyInPandasWithState(
-        _make_div_fn(
-            tuple(langs), _duration_us(window_duration), buffer_windows
-        ),
-        outputStructType=DIV_SCHEMA,
-        stateStructType=DIV_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    fn = _make_div_fn(
+        tuple(langs), _duration_us(window_duration), buffer_windows
+    )
+    return apply_stateful(
+        stat_series_stream, ["partition_key"], fn, DIV_SCHEMA,
+        DIV_STATE_SCHEMA,
     )

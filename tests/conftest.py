@@ -59,3 +59,24 @@ def ref():
             if k.startswith("msanomalydetector"):
                 del sys.modules[k]
         sys.modules.update(saved_mods)
+
+
+class _GroupStateStub:
+    """Minimal stand-in for pyspark's GroupState (exists/get/update), for
+    driving applyInPandasWithState functions directly."""
+
+    def __init__(self):
+        self._v, self.exists = None, False
+
+    @property
+    def get(self):
+        return self._v
+
+    def update(self, v):
+        self._v, self.exists = v, True
+
+
+@pytest.fixture
+def group_state():
+    """Factory of fresh GroupState stubs: ``state = group_state()``."""
+    return _GroupStateStub

@@ -23,6 +23,8 @@ from anomalydetector_spark.streaming.cusum_stream import (
     CUSUM_STATE_SCHEMA,
     _make_walk_fn,
 )
+from anomalydetector_spark.streaming.ewma_stream import _make_ewma_fn
+from anomalydetector_spark.streaming.seasonal_stream import _make_seasonal_fn
 
 T0 = dt.datetime(2024, 1, 1)
 N_DAYS = 24
@@ -148,18 +150,6 @@ def test_cusum_stream_matches_batch_reference_bit_for_bit(
     assert (first_alarm - T0).days >= 15  # alarm fires at/after shift
 
 
-class StubState:
-    def __init__(self):
-        self._v, self.exists = None, False
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v, self.exists = v, True
-
-
 def _pdf(day_vals):
     return pd.DataFrame(
         {
@@ -177,15 +167,21 @@ def _pdf(day_vals):
 DUR = 86_400_000_000
 
 
-def _fn():
-    return _make_walk_fn(
-        {("global", "m"): (10.0, 2.0)}, K, H, DUR, buffer_windows=3
-    )
+REF = {("global", "m"): (10.0, 2.0)}
+WALK_FNS = {
+    "cusum": lambda: _make_walk_fn(REF, K, H, DUR, buffer_windows=3),
+    "ewma": lambda: _make_ewma_fn(REF, 0.25, 3.0, DUR, buffer_windows=3),
+    "seasonal": lambda: _make_seasonal_fn(7, 4, 0.5, DUR, buffer_windows=3),
+}
 
 
-def test_replay_is_dropped_by_the_pointer():
-    fn = _fn()
-    st = StubState()
+def _fn(walk="cusum"):
+    return WALK_FNS[walk]()
+
+
+def test_replay_is_dropped_by_the_pointer(group_state, walk="cusum"):
+    fn = _fn(walk)
+    st = group_state()
     # 5 windows exceed the buffer horizon (3): day 0 consumes, then
     # 1..4 drain contiguously — all 5 walk in one call
     out1 = list(
@@ -203,9 +199,9 @@ def test_replay_is_dropped_by_the_pointer():
     assert sum(len(o) for o in out2) == 0
 
 
-def test_out_of_order_consumed_in_timestamp_order():
-    fn = _fn()
-    st = StubState()
+def test_out_of_order_consumed_in_timestamp_order(group_state, walk="cusum"):
+    fn = _fn(walk)
+    st = group_state()
     # day 1 before day 0: both sit in the reorder buffer (inside the
     # horizon, no pointer yet) — nothing emits
     out = list(fn(("global", "m"), [_pdf([(1, 12.0), (0, 10.0)])], st))
@@ -220,9 +216,9 @@ def test_out_of_order_consumed_in_timestamp_order():
     assert sum(len(o) for o in out3) == 0
 
 
-def test_gap_consumes_after_horizon():
-    fn = _fn()
-    st = StubState()
+def test_gap_consumes_after_horizon(group_state, walk="cusum"):
+    fn = _fn(walk)
+    st = group_state()
     # days 0..2 buffer (horizon not passed), then 4,5 (gap at 3):
     # horizon passes for 0 -> 0,1,2 walk; 4 waits (only 1 newer behind)
     list(fn(("global", "m"), [_pdf([(0, 10.0), (1, 10.0), (2, 10.0)])], st))
@@ -236,6 +232,22 @@ def test_gap_consumes_after_horizon():
     out2 = list(fn(("global", "m"), [_pdf([(6, 10.0), (7, 10.0)])], st))
     ts2 = pd.concat(out2)["window_start"].dt.day.tolist()
     assert ts2 == [5, 6, 7, 8]  # days 4..7
+
+
+@pytest.mark.parametrize("walk", ["ewma", "seasonal"])
+@pytest.mark.parametrize(
+    "check",
+    [
+        test_replay_is_dropped_by_the_pointer,
+        test_out_of_order_consumed_in_timestamp_order,
+        test_gap_consumes_after_horizon,
+    ],
+    ids=["replay", "out_of_order", "gap"],
+)
+def test_walk_ordering_rules(group_state, check, walk):
+    """The three ordering tests above (CUSUM by default) for the EWMA and
+    seasonal walks: one shared walk machine, so the same consume rules."""
+    check(group_state, walk)
 
 
 def test_kill_and_resume_continues_the_walk(spark, tmp_path):

@@ -15,10 +15,17 @@ import pandas as pd
 import pytest
 
 from anomalydetector_spark.operators.divergence import numeric_window_drift
+from anomalydetector_spark.plans.fused import duration_seconds
 from anomalydetector_spark.streaming import (
     numeric_drift_stream,
     streaming_window_histogram,
 )
+from anomalydetector_spark.streaming.churn_stream import _make_churn_fn
+from anomalydetector_spark.streaming.numeric_stream import (
+    _make_drift_fn,
+    _make_psi_fn,
+)
+from anomalydetector_spark.streaming.pairs import duration_us
 
 T0 = dt.datetime(2024, 1, 1)
 N_DAYS = 12
@@ -155,18 +162,6 @@ def test_streaming_numeric_drift_matches_batch_bit_for_bit(
     assert all(not math.isnan(v) for vals in got.values() for v in vals)
 
 
-class StubState:
-    def __init__(self):
-        self._v, self.exists = None, False
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v, self.exists = v, True
-
-
 def _hist_batch(day_counts):
     return pd.DataFrame(
         {
@@ -180,62 +175,112 @@ def _hist_batch(day_counts):
     )
 
 
-def test_redelivery_emits_once():
-    from anomalydetector_spark.streaming.numeric_stream import (
-        _make_drift_fn,
-    )
-    from anomalydetector_spark.streaming.pairs import duration_us
+def _topk_batch(day_counts):
+    """The same windows as top-k rows: the categories with a count."""
+    pdf = _hist_batch(day_counts)
+    pdf["topk"] = [
+        [f"c{i}" for i, n in enumerate(c) if n] for _, c in day_counts
+    ]
+    return pdf.drop(columns="bin_counts")
 
-    fn = _make_drift_fn(3, duration_us("1 day"), buffer_windows=16)
-    state = StubState()
-    b1 = list(
-        fn(("global",), [_hist_batch([(0, [5, 5, 0]), (1, [0, 5, 5])])],
-           state)
-    )[0]
+
+# per pair lens: state-function factory (n_bins, dur_us, buffer_windows),
+# input batch builder, and a score column with its identical-windows value
+PAIR_LENSES = {
+    "drift": (_make_drift_fn, _hist_batch, "linf", 0.0),
+    "psi": (
+        lambda n, dur, bw: _make_psi_fn(n, dur, bw, alpha=1),
+        _hist_batch, "psi", 0.0,
+    ),
+    "churn": (
+        lambda n, dur, bw: _make_churn_fn(dur, bw),
+        _topk_batch, "jaccard", 1.0,
+    ),
+}
+
+
+def _emitted(fn, batch, state):
+    """All rows one micro-batch emits (churn emits no frame when empty)."""
+    outs = list(fn(("global",), [batch], state))
+    return pd.concat(outs) if outs else pd.DataFrame()
+
+
+def test_redelivery_emits_once(group_state, lens="drift"):
+    make_fn, make_batch, col, same = PAIR_LENSES[lens]
+    fn = make_fn(3, duration_us("1 day"), 16)
+    state = group_state()
+    b1 = _emitted(
+        fn, make_batch([(0, [5, 5, 0]), (1, [0, 5, 5])]), state
+    )
     assert len(b1) == 1
     # stage-1 restart replays the same windows plus one new one
-    b2 = list(
-        fn(
-            ("global",),
-            [_hist_batch(
-                [(0, [5, 5, 0]), (1, [0, 5, 5]), (2, [0, 5, 5])]
-            )],
-            state,
-        )
-    )[0]
+    b2 = _emitted(
+        fn,
+        make_batch([(0, [5, 5, 0]), (1, [0, 5, 5]), (2, [0, 5, 5])]),
+        state,
+    )
     assert len(b2) == 1
     assert b2["window_start"].iloc[0] == pd.Timestamp("2024-01-03")
-    assert b2["linf"].iloc[0] == 0.0  # identical histograms
+    assert b2[col].iloc[0] == same  # identical histograms
 
 
-def test_ledger_blocks_replay_beyond_buffer_horizon():
-    from anomalydetector_spark.streaming.numeric_stream import (
-        _make_drift_fn,
-    )
-    from anomalydetector_spark.streaming.pairs import duration_us
-
-    fn = _make_drift_fn(2, duration_us("1 day"), buffer_windows=2)
-    state = StubState()
-    b1 = list(
-        fn(("global",),
-           [_hist_batch([(d, [3, 1]) for d in range(5)])], state)
-    )[0]
+def test_ledger_blocks_replay_beyond_buffer_horizon(group_state, lens="drift"):
+    make_fn, make_batch, _, _ = PAIR_LENSES[lens]
+    fn = make_fn(2, duration_us("1 day"), 2)
+    state = group_state()
+    b1 = _emitted(fn, make_batch([(d, [3, 1]) for d in range(5)]), state)
     assert len(b1) == 4  # days 1-4; buffer now holds only days 3,4
-    b2 = list(
-        fn(("global",),
-           [_hist_batch([(d, [3, 1]) for d in range(3)])], state)
-    )[0]
+    b2 = _emitted(fn, make_batch([(d, [3, 1]) for d in range(3)]), state)
     assert len(b2) == 0  # ledger blocks re-emission beyond the buffer
 
 
-def test_drift_values_match_hand_computation():
-    from anomalydetector_spark.streaming.numeric_stream import (
-        _make_drift_fn,
-    )
-    from anomalydetector_spark.streaming.pairs import duration_us
+@pytest.mark.parametrize("lens", ["psi", "churn"])
+@pytest.mark.parametrize(
+    "check",
+    [
+        test_redelivery_emits_once,
+        test_ledger_blocks_replay_beyond_buffer_horizon,
+    ],
+    ids=["redelivery", "ledger"],
+)
+def test_pair_stream_exactly_once(group_state, check, lens):
+    """The two exactly-once tests above (numeric drift by default) for the
+    PSI and top-k churn streams: one shared pair machine."""
+    check(group_state, lens)
 
+
+@pytest.mark.parametrize(
+    "text, seconds",
+    [
+        ("1 day", 86_400),
+        ("2 Days", 172_800),
+        ("1 day 12 hours", 129_600),
+        ("6 HOURS", 21_600),
+        ("1 week", 604_800),
+        ("1 month", None),
+        ("1 fortnight", None),
+        ("day", None),
+        ("0 days", None),
+        ("", None),
+    ],
+)
+@pytest.mark.parametrize(
+    "parse, scale", [(duration_seconds, 1), (duration_us, 1_000_000)],
+    ids=["duration_seconds", "duration_us"],
+)
+def test_window_duration_grammar(parse, scale, text, seconds):
+    """The engine's and the streams' window parsers are one grammar:
+    multi-unit, case-insensitive, ValueError on anything else."""
+    if seconds is None:
+        with pytest.raises(ValueError):
+            parse(text)
+    else:
+        assert parse(text) == seconds * scale
+
+
+def test_drift_values_match_hand_computation(group_state):
     fn = _make_drift_fn(4, duration_us("1 day"), buffer_windows=8)
-    state = StubState()
+    state = group_state()
     # prev: [3,1,0,0] T=4; cur: [0,2,2,0] T=4
     (row,) = list(
         fn(("global",),

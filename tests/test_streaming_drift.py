@@ -198,29 +198,13 @@ def test_streaming_checkpoint_resume_no_duplicates(spark, stream_dirs, tmp_path)
     assert total > n_first  # the second drain appended new windows
 
 
-class _FakeState:
-    """Minimal stand-in for pyspark GroupState (exists/get/update)."""
-
-    def __init__(self):
-        self.exists = False
-        self._v = None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-        self.exists = True
-
-
-def _drive_scorer(params, increments):
+def _drive_scorer(params, increments, state):
     """Feed window increments through _make_scorer one micro-batch at a
-    time; return (emitted rows concat, max retained state points)."""
+    time, with ``state`` a fresh GroupState stub; return (emitted rows
+    concat, max retained state points)."""
     from anomalydetector_spark.streaming.drift_stream import _make_scorer
 
     scorer = _make_scorer(params)
-    state = _FakeState()
     outs, max_state = [], 0
     for inc in increments:
         res = list(scorer(("p0", "null_rate"), [inc], state))
@@ -235,7 +219,7 @@ def _drive_scorer(params, increments):
     return emitted.sort_values("window_start").reset_index(drop=True), max_state
 
 
-def test_incremental_scoring_bounded_state_same_scores():
+def test_incremental_scoring_bounded_state_same_scores(group_state):
     """VERDICT r1 #8: with batch_size set, per-micro-batch kernel work and
     state are bounded (last two SR batches) while emitted scores stay
     identical to whole-series re-scoring."""
@@ -258,8 +242,8 @@ def test_incremental_scoring_bounded_state_same_scores():
     ]
 
     B = 50
-    full, full_max = _drive_scorer(SrParams(batch_size=0), incs)
-    inc_mode, inc_max = _drive_scorer(SrParams(batch_size=B), incs)
+    full, full_max = _drive_scorer(SrParams(batch_size=0), incs, group_state())
+    inc_mode, inc_max = _drive_scorer(SrParams(batch_size=B), incs, group_state())
 
     # whole-series mode keeps everything; incremental mode stays bounded
     assert full_max == n
@@ -273,7 +257,7 @@ def test_incremental_scoring_bounded_state_same_scores():
     assert len(spiky) >= 4
 
 
-def test_incremental_matches_full_state_batch_mode():
+def test_incremental_matches_full_state_batch_mode(group_state):
     """Incremental trimming vs an untrimmed reference run of the SAME
     batch-mode params: emissions must be bit-identical."""
     import numpy as np
@@ -293,7 +277,7 @@ def test_incremental_matches_full_state_batch_mode():
     ]
 
     B = 64
-    inc_mode, inc_max = _drive_scorer(SrParams(batch_size=B), incs)
+    inc_mode, inc_max = _drive_scorer(SrParams(batch_size=B), incs, group_state())
     assert inc_max <= 2 * B + max(len(i) for i in incs)
 
     # untrimmed reference: replay the same batch-mode scoring with full
@@ -394,7 +378,7 @@ def test_streaming_shape_drift_matches_batch(spark, stream_dirs):
         assert abs(tvd - exp[w][1]) < 1e-9, (w, tvd, exp[w][1])
 
 
-def test_shape_state_redelivery_emits_once():
+def test_shape_state_redelivery_emits_once(group_state):
     """A re-delivered (replayed) window must not reset the emitted flag:
     the divergence row for a window appears exactly once across
     micro-batches. Drives the state function directly with a stub
@@ -405,17 +389,6 @@ def test_shape_state_redelivery_emits_once():
         _duration_us,
         _make_div_fn,
     )
-
-    class StubState:
-        def __init__(self):
-            self._v, self.exists = None, False
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v, self.exists = v, True
 
     langs = ("en", "de")
     fn = _make_div_fn(langs, _duration_us("1 day"), buffer_windows=16)
@@ -430,7 +403,7 @@ def test_shape_state_redelivery_emits_once():
             rows, columns=["partition_key", "stat_name", "window_start", "value"]
         )
 
-    state = StubState()
+    state = group_state()
     b1 = list(fn(("global",), [batch([(day, (0.5, 0.5)),
                                       (day + pd.Timedelta(days=1), (0.9, 0.1))])],
                  state))[0]
@@ -445,7 +418,7 @@ def test_shape_state_redelivery_emits_once():
     assert abs(b2["js_divergence"].iloc[0]) < 1e-12  # identical dists
 
 
-def test_shape_ledger_blocks_replay_beyond_buffer_horizon():
+def test_shape_ledger_blocks_replay_beyond_buffer_horizon(group_state):
     """The emitted-window ledger outlives the vector buffer: a replayed
     window EVICTED from the buffer (buffer_windows=2, five windows seen)
     still cannot double-emit."""
@@ -453,17 +426,6 @@ def test_shape_ledger_blocks_replay_beyond_buffer_horizon():
         _duration_us,
         _make_div_fn,
     )
-
-    class StubState:
-        def __init__(self):
-            self._v, self.exists = None, False
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v, self.exists = v, True
 
     fn = _make_div_fn(("en", "de"), _duration_us("1 day"), buffer_windows=2)
     day = pd.Timestamp("2024-01-01")
@@ -478,7 +440,7 @@ def test_shape_ledger_blocks_replay_beyond_buffer_horizon():
             rows, columns=["partition_key", "stat_name", "window_start", "value"]
         )
 
-    state = StubState()
+    state = group_state()
     b1 = list(fn(("global",), [batch([(d, (0.5, 0.5)) for d in range(5)])],
                  state))[0]
     assert len(b1) == 4  # days 1-4 scored; buffer now holds only days 3,4

@@ -204,6 +204,40 @@ def test_stream_validate_cli_shape_drift(spark, tmp_path):
     pages.unpersist()
 
 
+def test_stream_validate_cli_topk_churn_file_uri_output(spark, tmp_path):
+    """--topk-churn with a FRESH ``file://`` output (regression: the
+    stage-2 top-k source directory was pre-created only for bare paths,
+    so its file source threw PATH_NOT_FOUND): the churn stage drains and
+    its rows match the set arithmetic over the materialized top-k."""
+    from datetime import timedelta
+
+    from anomalydetector_spark import cli
+
+    pages = datagen.generate_pages(spark, N_ROWS).dropDuplicates(["url"]).cache()
+    pages.count()
+    in_dir = _write_chunks(spark, tmp_path, pages, dup_frac_mod=10**9)
+    out = str(tmp_path / "out")
+    cli.main([
+        "stream-validate", "--input-path", in_dir,
+        "--output-path", f"file://{out}",
+        "--checkpoint", str(tmp_path / "ckpt"), "--available-now",
+        "--topk-churn", "lang", "--churn-candidates", "en,de,fr,zh,es",
+        "--churn-k", "2", "--stream-buffer-windows", "4",
+    ])
+    topk = {
+        r.window_start: set(r.topk)
+        for r in spark.read.parquet(f"{out}/topk").collect()
+    }
+    churn = spark.read.parquet(f"{out}/topk_churn").collect()
+    assert len(churn) > 0
+    for r in churn:
+        cur, prev = topk[r.window_start], topk[r.window_start - timedelta(days=1)]
+        assert (r.n_kept, r.n_new, r.n_dropped) == (
+            len(cur & prev), len(cur - prev), len(prev - cur)
+        )
+    pages.unpersist()
+
+
 def test_stream_validate_cli_quarantine(spark, tmp_path):
     """--quarantine streams every input row into the clean/quarantined
     split with stateless tags (null ts + suite row asserts), exactly
